@@ -22,10 +22,18 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from mapreduce_sm_spark.functions.vectors import (
@@ -410,25 +418,37 @@ def _lit_relation(spark: SparkSession, rows, cols) -> DataFrame:
     k=512 x d=64: 2.6 vs 0.41 s — the ANTLR parse is super-linear in
     expression count). Above _LIT_RELATION_MAX_ELEMS this falls back to
     createDataFrame, so a large-K hierarchical build never pays a parse
-    penalty.
+    penalty. Empty rows (no literal to parse) and non-finite doubles (no
+    SQL literal spells NaN or infinity) take the same fallback.
 
-    cols: (name, kind) pairs, kind in {"int", "vec"}; rows must be
-    non-empty (callers guard the empty-corpus path already)."""
-    n_elems = sum(
-        len(v) if kind == "vec" else 1
-        for row in rows
-        for v, (_, kind) in zip(row, cols)
-    )
-    if n_elems > _LIT_RELATION_MAX_ELEMS:
-        schema = ", ".join(
-            f"{name} {'int' if kind == 'int' else 'array<double>'}"
+    Both paths return one schema: non-nullable int / array<double>
+    columns, the types the literal path infers, with ints pinned by
+    CAST(... AS INT).
+
+    cols: (name, kind) pairs, kind in {"int", "vec"}."""
+    n_elems = 0
+    finite = True
+    for row in rows:
+        for v, (_, kind) in zip(row, cols):
+            if kind == "vec":
+                n_elems += len(v)
+                finite = finite and all(map(math.isfinite, v))
+            else:
+                n_elems += 1
+    if not rows or not finite or n_elems > _LIT_RELATION_MAX_ELEMS:
+        schema = StructType([
+            StructField(
+                name,
+                IntegerType() if kind == "int" else ArrayType(DoubleType(), False),
+                False,
+            )
             for name, kind in cols
-        )
+        ])
         return spark.createDataFrame(rows, schema=schema)
 
     def fmt(v, kind: str) -> str:
         if kind == "int":
-            return str(int(v))
+            return "CAST(%d AS INT)" % int(v)
         return "array(%s)" % ", ".join(repr(float(x)) + "D" for x in v)
 
     body = ", ".join(

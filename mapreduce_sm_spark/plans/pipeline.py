@@ -62,6 +62,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_sm_spark.sources.sinks import write_formatted_text
+
 
 @dataclass(frozen=True)
 class SortSpec:
@@ -140,10 +142,6 @@ class Pipeline:
         """Formatted text sink ≡ output_writer. `fmt` is a printf-style
         format ("%s\t%d", "%d:%s"). single_file=True coalesces to one file —
         test-scale only, like the reference's single FILE* output."""
-        df = self.to_df(*source_args)
-        out = df.select(
-            F.format_string(fmt, *[F.col(c) for c in cols]).alias("value")
+        write_formatted_text(
+            self.to_df(*source_args), fmt, cols, path, single_file=single_file
         )
-        if single_file:
-            out = out.coalesce(1)
-        out.write.mode("overwrite").text(path)

@@ -588,3 +588,35 @@ def test_lit_relation_bit_exact(spark):
     assert {r.cid: bits(r.cvec) for r in ref2} == {
         r.cid: bits(r.cvec) for r in got2
     }
+
+
+def test_lit_relation_non_finite_values_take_the_fallback(spark):
+    """NaN and +/-inf have no SQL double literal; a centroid holding one
+    must still come back (through createDataFrame), not fail the parse."""
+    import math
+
+    from mapreduce_sm_spark.operators.similarity import _lit_relation
+
+    rows = [(0, [float("nan"), 1.5]), (1, [float("inf"), -float("inf")])]
+    got = {r.cid: r.cvec for r in _lit_relation(
+        spark, rows, (("cid", "int"), ("cvec", "vec"))).collect()}
+    assert math.isnan(got[0][0]) and got[0][1] == 1.5
+    assert got[1] == [math.inf, -math.inf]
+
+
+def test_lit_relation_paths_share_one_schema(spark):
+    """The SQL-literal path and the createDataFrame fallback (taken for
+    empty rows and non-finite values) must return identical schemas, so a
+    caller never sees the column types flip with its data."""
+    from mapreduce_sm_spark.operators.similarity import _lit_relation
+
+    cols = (("cid", "int"), ("cvec", "vec"))
+    plan = lambda df: df._jdf.queryExecution().analyzed().toString()  # noqa: E731
+    literal = _lit_relation(spark, [(3, [0.5, 2.0])], cols)
+    empty = _lit_relation(spark, [], cols)
+    non_finite = _lit_relation(spark, [(3, [float("nan"), 2.0])], cols)
+    assert "inline" in plan(literal)
+    assert "inline" not in plan(empty) and "inline" not in plan(non_finite)
+    assert literal.schema == empty.schema == non_finite.schema
+    assert literal.schema.simpleString() == "struct<cid:int,cvec:array<double>>"
+    assert empty.count() == 0

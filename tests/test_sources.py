@@ -3,6 +3,8 @@ reference's single local text file)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -22,6 +24,90 @@ def test_text_roundtrip_with_line_numbers(spark, tmp_path):
     want = [r.text for r in docs.collect()]
     assert [r.value for r in rows] == want
     assert [r.line_no for r in rows] == list(range(50))
+
+
+@contextmanager
+def _conf(spark, **kv):
+    """Set session confs for one block, restoring the previous values."""
+    old = {k: spark.conf.get(k) for k in kv}
+    for k, v in kv.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _numbered(spark, path):
+    from mapreduce_sm_spark.sources import read_text
+
+    rows = read_text(spark, path, with_line_numbers=True).collect()
+    return sorted((r.line_no, r.value) for r in rows)
+
+
+def _enumerated(files):
+    """What read_text must number: each file's lines (\\n, \\r\\n and \\r all
+    end a line, as in Hadoop's LineRecordReader), files in path order."""
+    lines = []
+    for f in sorted(files):
+        lines += f.read_bytes().splitlines()
+    return [(i, b.decode("utf-8")) for i, b in enumerate(lines)]
+
+
+def _text_lines(seed, n):
+    words = ["data", "spark", "x", "", "line with spaces", "zz" * 40]
+    return [" ".join(words[(seed * 7 + i * j) % len(words)] for j in range(i % 5))
+            for i in range(n)]
+
+
+def test_line_numbers_span_many_splits_per_file(spark, tmp_path):
+    """A 1 KB split size (the CLI's task_size knob) cuts one file into
+    many splits; numbering must stay dense and in byte order across them."""
+    f = tmp_path / "big.txt"
+    f.write_text("\n".join(_text_lines(1, 900)) + "\n")
+    want = _enumerated([f])
+    with _conf(spark, **{"spark.sql.files.maxPartitionBytes": "1024"}):
+        assert spark.read.text(str(f)).rdd.getNumPartitions() > 10
+        assert _numbered(spark, str(f)) == want
+
+
+def test_line_numbers_directory_path_then_offset_order(spark, tmp_path):
+    """Several files, some split, some packed into one task together (zero
+    open cost): lines are numbered by file path, then byte offset.
+    Covers CRLF and lone-CR endings, empty lines, a missing final newline
+    and an empty file."""
+    d = tmp_path / "dir"
+    d.mkdir()
+    (d / "c.txt").write_text("\n".join(_text_lines(2, 400)) + "\n")
+    (d / "a.txt").write_bytes(b"first\r\n\r\nthird\r\n" * 150)
+    (d / "b.txt").write_bytes(b"")
+    (d / "d.txt").write_bytes(b"\n\nx\ry\n" * 60 + b"no newline at end")
+    (d / "e.txt").write_text("only line\n")
+    want = _enumerated(d.iterdir())
+    with _conf(spark, **{"spark.sql.files.maxPartitionBytes": "2048",
+                         "spark.sql.files.openCostInBytes": "0"}):
+        assert _numbered(spark, str(d)) == want
+
+
+def test_line_numbers_of_an_empty_file(spark, tmp_path):
+    f = tmp_path / "empty.txt"
+    f.write_bytes(b"")
+    assert _numbered(spark, str(f)) == []
+
+
+def test_numbered_read_plan_stays_in_the_jvm(spark, tmp_path):
+    """Guard: line numbering must run on the text FileScan itself; no RDD
+    conversion or Python worker row path may come back."""
+    from mapreduce_sm_spark.sources import read_text
+
+    f = tmp_path / "in.txt"
+    f.write_text("a\nb\n")
+    df = read_text(spark, str(f), with_line_numbers=True)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan text" in plan, plan
+    for node in ("ExistingRDD", "PythonRDD", "BatchEvalPython"):
+        assert node not in plan, plan
 
 
 def test_string_match_formatted_output(spark, tmp_path):

@@ -11,11 +11,14 @@ Protocol:
 - reference: `wordcount 32 50 in out` / `string_match 32 20 data in out`,
   best of N_RUNS wall-clock timings of the whole process (its own printed
   WALL_TIME is also recorded);
-- engine: the same jobs through the public API (read_text -> tokenize ->
-  count -> sort -> formatted sink; filter -> sort -> formatted sink) on
+- engine: the CLI's jobs through the public API (read_text -> tokenize ->
+  count -> sort -> "%s\t%d" sink; line-numbered read_text -> filter ->
+  sort on line_no -> "%d:%s" sink, both sinks single-file) on
   local[$SPARK_GRAFT_CPUS], best of N_RUNS with a warmed session — the
   steady-state cost a resident service pays; the cold first run is recorded
-  too, since the reference pays process startup each run.
+  too, since the reference pays process startup each run;
+- where the reference binaries are not installed, only the engine side is
+  timed and the reference columns read "not run".
 - the input ends at a 100-line boundary + sentinel so the reference's
   tail-dropping splitter (SURVEY App. A) processes all content lines.
 
@@ -61,7 +64,13 @@ def _make_input(path: str, target_mb: int) -> int:
     return n_blocks * 100
 
 
-def _time_ref(binary: str, args: list[str], runs: int = _N_RUNS) -> float:
+def _time_ref(src: str, tmp: str, args: list[str], runs: int = _N_RUNS) -> float | None:
+    """Best full-process wall time of a reference binary; None if absent."""
+    if not os.path.exists(src):
+        return None
+    binary = os.path.join(tmp, os.path.basename(src))
+    shutil.copy(src, binary)
+    os.chmod(binary, 0o755)
     best = float("inf")
     for _ in range(runs):
         t0 = time.time()
@@ -79,16 +88,9 @@ def main() -> None:
         n_lines = _make_input(in_path, target_mb)
         size_mb = round(os.path.getsize(in_path) / 1024 / 1024, 1)
 
-        wc_bin = os.path.join(tmp, "wordcount")
-        sm_bin = os.path.join(tmp, "string_match")
-        shutil.copy(_REF_WC, wc_bin)
-        shutil.copy(_REF_SM, sm_bin)
-        os.chmod(wc_bin, 0o755)
-        os.chmod(sm_bin, 0o755)
-
-        ref_wc = _time_ref(wc_bin, [cpus, "50", in_path, os.path.join(tmp, "o1")])
+        ref_wc = _time_ref(_REF_WC, tmp, [cpus, "50", in_path, os.path.join(tmp, "o1")])
         ref_sm = _time_ref(
-            sm_bin, [cpus, "20", "data", in_path, os.path.join(tmp, "o2")]
+            _REF_SM, tmp, [cpus, "20", "data", in_path, os.path.join(tmp, "o2")]
         )
 
         from pyspark.sql import functions as F
@@ -119,44 +121,51 @@ def main() -> None:
         def ours_string_match() -> float:
             t0 = time.time()
             df = (
-                read_text(spark, in_path)
+                read_text(spark, in_path, with_line_numbers=True)
                 .filter(F.contains(F.lower(F.col("value")), F.lit("data")))
-                .select("value")
+                .orderBy("line_no")
             )
-            # ordered single-file output like the reference's sink
-            df.orderBy("value").write.mode("overwrite").text(
-                os.path.join(tmp, "s2")
+            write_formatted_text(
+                df, "%d:%s", ["line_no", "value"], os.path.join(tmp, "s2"),
+                single_file=True,
             )
             return time.time() - t0
 
         wc_times = [round(ours_wordcount(), 3) for _ in range(_N_RUNS)]
         sm_times = [round(ours_string_match(), 3) for _ in range(_N_RUNS)]
-        ours_wc, ours_wc_cold = min(wc_times), wc_times[0]
-        ours_sm, ours_sm_cold = min(sm_times), sm_times[0]
+        jobs = {
+            name: {
+                "reference_sec": ref,
+                "engine_sec": min(times),
+                "engine_cold_sec": times[0],
+                "speedup": round(ref / min(times), 2) if ref else None,
+            }
+            for name, ref, times in (
+                ("wordcount", ref_wc, wc_times),
+                ("string_match", ref_sm, sm_times),
+            )
+        }
 
         result = {
             "metric": "reference_binary_head_to_head",
             "input_mb": size_mb,
             "input_lines": n_lines,
             "threads": int(cpus),
-            "wordcount": {
-                "reference_sec": ref_wc,
-                "engine_sec": ours_wc,
-                "engine_cold_sec": ours_wc_cold,
-                "speedup": round(ref_wc / ours_wc, 2),
-            },
-            "string_match": {
-                "reference_sec": ref_sm,
-                "engine_sec": ours_sm,
-                "engine_cold_sec": ours_sm_cold,
-                "speedup": round(ref_sm / ours_sm, 2),
-            },
+            **jobs,
             "protocol": f"best of {_N_RUNS}; reference = full process wall; "
             "engine = action wall in a warm session (cold first run shown)",
         }
         print(json.dumps(result))
 
-        with open("/root/repo/REFBENCH.md", "w") as f:
+        def row(name: str) -> str:
+            j = jobs[name]
+            ref = f"{j['reference_sec']} s" if j["reference_sec"] else "not run"
+            speedup = f"{j['speedup']}x" if j["speedup"] else "n/a"
+            return (f"| {name} | {ref} | {j['engine_sec']} s | "
+                    f"{j['engine_cold_sec']} s | {speedup} |\n")
+
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        with open(os.path.join(repo, "REFBENCH.md"), "w") as f:
             f.write(
                 "# REFBENCH — engine vs the reference's own binaries\n\n"
                 f"Shared input: {size_mb} MB, {n_lines} lines of "
@@ -166,13 +175,13 @@ def main() -> None:
                 "action wall in a warm session, with the cold first run "
                 "shown for the one-shot comparison. Generated by "
                 "`python tools/bench_reference.py` "
-                "(`REFBENCH_MB` sizes the input).\n\n"
+                "(`REFBENCH_MB` sizes the input). Both engine jobs are the "
+                "CLI's: string_match numbers lines, filters, sorts on the "
+                "line number and writes one \"%d:%s\" file. \"not run\" "
+                "means the reference binaries were not installed.\n\n"
                 "| job | reference | engine (warm) | engine (cold) | "
                 "speedup (warm) |\n|---|---|---|---|---|\n"
-                f"| wordcount | {ref_wc} s | {ours_wc} s | {ours_wc_cold} s "
-                f"| {round(ref_wc / ours_wc, 2)}x |\n"
-                f"| string_match | {ref_sm} s | {ours_sm} s | {ours_sm_cold} "
-                f"s | {round(ref_sm / ours_sm, 2)}x |\n"
+                + row("wordcount") + row("string_match")
             )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
