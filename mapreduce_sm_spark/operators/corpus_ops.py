@@ -233,12 +233,16 @@ def inverted_index_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_hist_oracle() -> str:
-    # reuse the recursive-CTE CC oracle from dedup.py, folded to sizes
-    from mapreduce_sm_spark.operators.dedup import _CC_ORACLE
+    # the 32-bit SimHash CC oracle from dedup.py, folded to sizes
+    from mapreduce_sm_spark.operators.dedup import (
+        _SIMHASH32,
+        _cc_sql,
+        _simhash_pairs_sql,
+    )
 
-    base = _CC_ORACLE.rsplit("ORDER BY doc_id", 1)[0]
     return f"""
-WITH labels AS ({base}),
+WITH RECURSIVE {_simhash_pairs_sql(_SIMHASH32)},
+{_cc_sql("documents")},
 sizes AS (
   SELECT component, count(*) AS cluster_size FROM labels GROUP BY component
 )

@@ -19,6 +19,19 @@ Scale posture (100 TB):
 - every hash is the portable md5-based hash60 so the DuckDB oracle
   reproduces results bit-for-bit (functions/hashing.py).
 
+Shared kernels — each near-dup stage has exactly one implementation here,
+and every operator (including similarity.semantic_dedup_clusters and
+corpus_ops.dedup_cluster_size_histogram) composes them:
+  _shingled_h60          distinct char 5-gram shingles -> 60-bit hash array
+  _exact_verify          candidate pairs -> exact integer-pm4 Jaccard gate
+  _new_batch_split       old/new halves at the broadcast 4*max(doc_id) div 5
+  _simhash_spark         SimHash signature at 32 or 60 bits (oracle:
+                         _simhash_sql_cte)
+  _banded_hamming_pairs  pigeonhole-banded Hamming pair search (oracle:
+                         _simhash_pairs_sql)
+  _cc_labels             connected components by min-label propagation,
+                         resolved onto a vertex frame (oracle: _cc_sql)
+
 Algorithms (public literature):
 - MinHash: Broder, "On the resemblance and containment of documents" (1997).
 - LSH banding: Leskovec/Rajaraman/Ullman, "Mining of Massive Datasets" ch.3.
@@ -30,6 +43,8 @@ Algorithms (public literature):
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +55,10 @@ from mapreduce_sm_spark.functions.hashing import (
     hash60_sql,
     minhash_permutation_params,
 )
-from mapreduce_sm_spark.functions.text import char_shingles, char_shingles_sql
+from mapreduce_sm_spark.functions.text import (
+    char_shingles_sql,
+    distinct_shingles,
+)
 from mapreduce_sm_spark.registry import REGISTRY
 from mapreduce_sm_spark.session import (
     checkpoint_df,
@@ -168,28 +186,28 @@ ORDER BY doc_a, doc_b
 """
 
 
-def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, lang, s: array<long>) — distinct 60-bit shingle hashes.
+def _shingled_h60(df: DataFrame) -> DataFrame:
+    """`df` without `text`, plus h60: array<long> — the distinct 5-gram
+    shingles of `text` hashed to 60-bit longs, the set every MinHash and
+    exact-Jaccard stage consumes.
 
-    fan_out: shingling expands each row ~60x; widen BEFORE the expansion.
-    Hashing happens here, once, so downstream branches (prefix index +
-    two verification join-backs) never touch shingle strings; Jaccard
-    over injective hashes equals Jaccard over shingles.
-
-    array_distinct runs on the STRINGS, before hashing — md5 then runs
-    once per distinct shingle (~2.4x fewer calls on real text), and the
-    string-side dedup matches the oracle's list_distinct(shingles)
-    exactly (hash-side dedup would silently merge md5 collisions)."""
-    return fan_out(
-        table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
-        "doc_id",
-    ).select(
-        "doc_id",
-        "lang",
+    Hashing happens here, once, so downstream branches (signatures,
+    prefix index, verification join-backs) never touch shingle strings;
+    Jaccard over 60-bit hashes equals Jaccard over shingles (collision
+    odds ~n^2/2^61). array_distinct runs on the STRINGS, before hashing —
+    md5 then runs once per distinct shingle (~2.4x fewer calls on real
+    text), and the string-side dedup matches the oracle's
+    list_distinct(shingles) exactly (hash-side dedup would silently merge
+    md5 collisions). Shingling sits AFTER whatever filter `df` carries,
+    so slicing the corpus first means only the slice is ever shingled
+    (the compaction merge relies on this to leave the old corpus
+    untouched); callers fan_out first, since shingling expands each row
+    ~60x."""
+    return df.select(
+        *[c for c in df.columns if c != "text"],
         F.transform(
-            F.array_distinct(char_shingles("text", _JACCARD_K)),
-            lambda t: hash60(t),
-        ).alias("s"),
+            distinct_shingles("text", _JACCARD_K), lambda s: hash60(s)
+        ).alias("h60"),
     )
 
 
@@ -201,13 +219,6 @@ def _idiv(num, den):
     off-by-one a plain floor(num/den) double division can produce. The
     Column API has no `div` operator; this is its exact equivalent."""
     return ((num - num % den) / den).cast("long")
-
-
-def _jaccard_pm4(sa, sb):
-    """floor(J(A,B) * 1e4) as an exact long (see module gate note)."""
-    inter = F.size(F.array_intersect(sa, sb)).cast("long")
-    union = F.size(F.array_distinct(F.concat(sa, sb))).cast("long")
-    return _idiv(inter * F.lit(10000), union)
 
 
 def _jaccard_sized_pm4(sa, sb, na, nb):
@@ -231,7 +242,18 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached: the shingle frame feeds the prefix index and both
     # verification join-backs (3 plan branches)
     release_caches("dedup.ngram_jaccard")  # one-generation discipline
-    sh = _shingle_sets(spark, sf_dir).withColumn("n", F.size("s")).cache()
+    sh = (
+        _shingled_h60(
+            fan_out(
+                table(spark, sf_dir, "documents").select(
+                    "doc_id", "lang", "text"
+                ),
+                "doc_id",
+            )
+        )
+        .withColumn("n", F.size("h60"))
+        .cache()
+    )
     # materialization barrier: AQE launches the broadcast-build jobs of the
     # downstream joins CONCURRENTLY, and concurrent first readers of a lazy
     # cache each recompute it (in-flight partitions aren't deduped across
@@ -244,7 +266,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DOCUMENT FREQUENCY (rarest first, shingle value as tiebreak) makes
     # prefixes consist of rare shingles, so the equality join below stays
     # near-linear instead of degenerating to all-pairs on common shingles.
-    toks = sh.select("doc_id", "lang", "n", F.explode("s").alias("tok"))
+    toks = sh.select("doc_id", "lang", "n", F.explode("h60").alias("tok"))
     df_counts = toks.groupBy("tok").agg(F.count("*").alias("df"))
     # prefix length n - ceil(t*n) + 1, computed as floor((1-t)*n) + 2 with a
     # +1 safety margin (a longer prefix only adds candidates, never loses)
@@ -360,7 +382,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = F.transform(
         F.sequence(F.lit(0), F.lit(_JHIST_B - 1)),
         lambda bkt: F.size(
-            F.filter("s", lambda x: F.shiftright(x, _JHIST_SHIFT) == bkt)
+            F.filter("h60", lambda x: F.shiftright(x, _JHIST_SHIFT) == bkt)
         ),
     )
     sig = sh.select(
@@ -395,36 +417,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
     )
     # verification reuses the cached long arrays directly
-    sets = sh.select("doc_id", "n", F.col("s").alias("hs"))
-    pairs = (
-        kept.join(
-            sets.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("hs").alias("sa"),
-                F.col("n").alias("na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            sets.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("hs").alias("sb"),
-                F.col("n").alias("nb"),
-            ),
-            "doc_b",
-        )
-    )
-    return (
-        pairs.select(
-            "doc_a",
-            "doc_b",
-            _jaccard_sized_pm4(
-                F.col("sa"), F.col("sb"), F.col("na"), F.col("nb")
-            ).alias("jaccard_pm4"),
-        )
-        .filter(F.col("jaccard_pm4") >= _JACCARD_PM4)
-        .orderBy("doc_a", "doc_b")
-    )
+    return _exact_verify(kept, sh).orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -533,35 +526,26 @@ def _minhash_verified_pairs(
     spark: SparkSession,
     sf_dir: str,
     tag: str = "dedup.minhash_docs",
-    new_min: DataFrame | None = None,
+    new_only: bool = False,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard_pm4) — banded MinHash candidates verified
     with exact integer-pm4 Jaccard; the shared core of dedup_minhash,
-    the end-to-end corpus_near_dedup pipeline, and (with `new_min`) the
+    the end-to-end corpus_near_dedup pipeline, and (with `new_only`) the
     incremental dedup_minhash_incremental variant.
 
-    `new_min`: a 1-row (new_min BIGINT) frame, broadcast-joined (never
-    collected) so the PROBE side of the band join is restricted to
-    doc_id >= new_min. Only pairs whose LARGER id is NEW are generated —
-    OLD-OLD pairs are never formed. Because ids are assigned
+    `new_only`: the PROBE side of the band join is restricted to the new
+    batch (_new_batch_split). Only pairs whose LARGER id is NEW are
+    generated — OLD-OLD pairs are never formed. Because ids are assigned
     monotonically, the larger id of any OLD/NEW or NEW/NEW pair is
     always the NEW one, so this is exactly "pairs touching the new
     batch", while the build side stays the full band index."""
-    # hash shingles to 60-bit longs HERE, before the cache: md5 runs once
-    # per shingle total; signatures and both verification join-backs all
-    # work on the cached long array. Jaccard over 60-bit hashes equals
-    # Jaccard over shingles (collision odds ~n^2/2^61), and the cached
-    # frame is ~3x smaller than string shingles.
-    docs = fan_out(
-        table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
-    ).select(
-        "doc_id",
-        # distinct on strings BEFORE hashing: md5 runs once per distinct
-        # shingle, and dedup matches the oracle's list_distinct exactly
-        F.transform(
-            F.array_distinct(char_shingles("text", _JACCARD_K)),
-            lambda s: hash60(s),
-        ).alias("h60"),
+    # hashed BEFORE the cache: md5 runs once per shingle total, and the
+    # cached long-array frame is ~3x smaller than string shingles
+    docs = _shingled_h60(
+        fan_out(
+            table(spark, sf_dir, "documents").select("doc_id", "text"),
+            "doc_id",
+        )
     )
     # the shingle frame feeds three plan branches (signatures + both
     # verification join-backs); persist so shingling runs once, not 3x.
@@ -575,19 +559,11 @@ def _minhash_verified_pairs(
     track_caches(tag, docs)
     bands = _band_rows(_minhash_sigs(docs))
     probe = bands
-    if new_min is not None:
-        # incremental: probe side = NEW docs only (1-row broadcast
-        # threshold, no collect); build side = the full band index
-        probe = (
-            bands.crossJoin(F.broadcast(new_min))
-            .filter(F.col("doc_id") >= F.col("new_min"))
-            .drop("new_min")
-        )
-    cand = _band_candidates(bands, probe)
-    sets = docs.select(
-        "doc_id", F.size("h60").alias("n"), F.col("h60").alias("hs")
-    )
-    return _exact_verify(cand, sets)
+    if new_only:
+        # threshold from the corpus table (a doc_id-only scan), not from
+        # the band rows, whose max would first compute every signature
+        probe = _new_batch_split(bands, table(spark, sf_dir, "documents"))[1]
+    return _exact_verify(_band_candidates(bands, probe), docs)
 
 
 def _band_rows(sig: DataFrame) -> DataFrame:
@@ -628,26 +604,18 @@ def _band_candidates(build: DataFrame, probe: DataFrame) -> DataFrame:
 
 
 def _exact_verify(cand: DataFrame, sets: DataFrame) -> DataFrame:
-    """Join candidate pairs back to their shingle-hash sets (doc_id, n,
-    hs) and keep exact integer-pm4 Jaccard >= threshold."""
-    pairs = (
-        cand.join(
-            sets.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("hs").alias("sa"),
-                F.col("n").alias("na"),
-            ),
-            "doc_a",
+    """(doc_a, doc_b, jaccard_pm4): candidate pairs joined back to their
+    shingle-hash sets (a _shingled_h60 frame: doc_id, h60), kept where the
+    exact integer-pm4 Jaccard passes the gate."""
+
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("h60").alias(f"s{s}"),
+            F.size("h60").alias(f"n{s}"),
         )
-        .join(
-            sets.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("hs").alias("sb"),
-                F.col("n").alias("nb"),
-            ),
-            "doc_b",
-        )
-    )
+
+    pairs = cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
     return pairs.select(
         "doc_a",
         "doc_b",
@@ -704,13 +672,26 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "lsh", "incremental", "scale"),
 )
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents")
-    new_min = docs.agg(
+    return _minhash_verified_pairs(
+        spark, sf_dir, tag="dedup.minhash_incr", new_only=True
+    ).orderBy("doc_a", "doc_b")
+
+
+def _new_batch_split(
+    df: DataFrame, ids: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(old, new): the rows of `df` with doc_id below / at-or-above
+    T = 4 * max(doc_id) div 5 over `ids` — the newest fifth of a
+    monotonically assigned id space. T is a 1-row aggregate broadcast
+    into a cross join, never collected to the driver."""
+    thr = ids.agg(
         F.expr("4 * max(doc_id) div 5").cast("long").alias("new_min")
     )
-    return _minhash_verified_pairs(
-        spark, sf_dir, tag="dedup.minhash_incr", new_min=new_min
-    ).orderBy("doc_a", "doc_b")
+    tagged = df.crossJoin(F.broadcast(thr))
+    return (
+        tagged.filter(F.col("doc_id") < F.col("new_min")).drop("new_min"),
+        tagged.filter(F.col("doc_id") >= F.col("new_min")).drop("new_min"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -748,31 +729,21 @@ def dedup_minhash_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreduce_sm_spark.session import shared_tmpdir
 
-    docs = fan_out(
-        table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
-    ).select(
-        "doc_id",
-        F.transform(
-            F.array_distinct(char_shingles("text", _JACCARD_K)),
-            lambda s: hash60(s),
-        ).alias("h60"),
+    docs = _shingled_h60(
+        fan_out(
+            table(spark, sf_dir, "documents").select("doc_id", "text"),
+            "doc_id",
+        )
     )
     release_caches("dedup.minhash_persist")
     docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
     track_caches("dedup.minhash_persist", docs)
-    thr = docs.agg(
-        F.expr("4 * max(doc_id) div 5").cast("long").alias("new_min")
-    )
+    old, new = _new_batch_split(docs, docs)
 
     # phase 1 (the "yesterday" job): shingle, sign, and band the OLD
     # corpus; persist its band index and shingle-hash sets. Both writes
     # are mode("overwrite") into a per-(process, sf) store, so bench's
     # trials reuse one copy and scale factors never collide.
-    old = (
-        docs.crossJoin(F.broadcast(thr))
-        .filter(F.col("doc_id") < F.col("new_min"))
-        .drop("new_min")
-    )
     store = shared_tmpdir("mh_index_", sf_dir)
     idx_path = os.path.join(store, "band_index")
     sets_path = os.path.join(store, "shingle_sets")
@@ -784,20 +755,11 @@ def dedup_minhash_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NEW-NEW pairs form too); probe side = new bands only (so OLD-OLD
     # pairs cannot).
     loaded_idx = spark.read.parquet(idx_path)
-    loaded_sets = spark.read.parquet(sets_path)
-    new = (
-        docs.crossJoin(F.broadcast(thr))
-        .filter(F.col("doc_id") >= F.col("new_min"))
-        .drop("new_min")
-    )
     new_bands = _band_rows(_minhash_sigs(new))
     cand = _band_candidates(loaded_idx.unionByName(new_bands), new_bands)
     # exact verify: OLD sets come from the store (the old corpus is not
     # re-shingled), NEW sets from the in-job frame
-    sets = (
-        loaded_sets.unionByName(new)
-        .select("doc_id", F.size("h60").alias("n"), F.col("h60").alias("hs"))
-    )
+    sets = spark.read.parquet(sets_path).unionByName(new)
     return _exact_verify(cand, sets).orderBy("doc_a", "doc_b")
 
 
@@ -845,21 +807,6 @@ FROM bands
 """
 
 
-def _shingled_h60(df: DataFrame) -> DataFrame:
-    """(doc_id, h60): distinct 5-gram shingles hashed to 60-bit longs —
-    the input both _minhash_sigs and the exact verify consume. Shingling
-    sits AFTER whatever filter `df` carries, so slicing the corpus first
-    means only the slice is ever shingled (the compaction merge relies
-    on this to leave the old corpus untouched)."""
-    return df.select(
-        "doc_id",
-        F.transform(
-            F.array_distinct(char_shingles("text", _JACCARD_K)),
-            lambda s: hash60(s),
-        ).alias("h60"),
-    )
-
-
 def _compaction_merged_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, str]:
@@ -876,30 +823,18 @@ def _compaction_merged_index(
     raw = fan_out(
         table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
-    thr = raw.agg(
-        F.expr("4 * max(doc_id) div 5").cast("long").alias("new_min")
-    )
+    old, new = _new_batch_split(raw, raw)
     store = shared_tmpdir("mh_compact_", sf_dir)
     idx_path = os.path.join(store, "band_index")
     compact_path = os.path.join(store, "band_index_compacted")
 
     # phase 1 ("yesterday"): index the OLD corpus only, persist
-    old = (
-        raw.crossJoin(F.broadcast(thr))
-        .filter(F.col("doc_id") < F.col("new_min"))
-        .drop("new_min")
-    )
     _band_rows(_minhash_sigs(_shingled_h60(old))).write.mode(
         "overwrite"
     ).parquet(idx_path)
 
     # phase 2 (the merge): stored index (parquet scan, no re-shingle)
     # UNION ALL the delta batch's index (shingled after the id filter)
-    new = (
-        raw.crossJoin(F.broadcast(thr))
-        .filter(F.col("doc_id") >= F.col("new_min"))
-        .drop("new_min")
-    )
     merged = spark.read.parquet(idx_path).unionByName(
         _band_rows(_minhash_sigs(_shingled_h60(new)))
     )
@@ -1110,10 +1045,10 @@ def _stream_maintained_index(
 
 
 # ---------------------------------------------------------------------------
-# SimHash — near-dup detection for token-level similarity.
+# SimHash — near-dup detection for token-level similarity, at two widths.
 #
-# >>> DEFAULT FOR CONSUMERS: dedup_simhash60_pairs (below). <<<
-# This 32-bit rung stays registered as the MEASURED counter-example: its
+# >>> DEFAULT FOR CONSUMERS: the 60-bit rung (dedup_simhash60_pairs). <<<
+# The 32-bit rung stays registered as the MEASURED counter-example: its
 # 4-5-bit pigeonhole chunks birthday-collide once n per (lang, chunk)
 # block passes ~2^5, so banded candidates grow quadratically — 12.9x wall
 # for 10x docs in the r08 scale proof vs the 60-bit rung's 1.7x
@@ -1121,22 +1056,45 @@ def _stream_maintained_index(
 # tf_cosine_pairs_prefix: the simple rung defines the semantics, the
 # successor is the plan you'd run at scale.
 #
-# 32-bit simhash: token -> hash60 % 2^32; bit j of the signature is the
+# b-bit simhash: token -> hash60 % 2^b; bit j of the signature is the
 # sign (>= 0) of sum over tokens of (2*bit_j(h) - 1). All-integer, so the
-# oracle replays it exactly. Pair search blocks on lang here; the 100 TB
-# blocking is chunked-signature banding (split the signature into b > d
-# chunks; pigeonhole guarantees pairs within hamming distance d share a
-# chunk), which turns the search into an equality join exactly like
-# MinHash banding.
+# oracle replays it exactly. At b = 60 the modulo is the identity
+# (hash60 < 2^60), so both widths share one expression. Pair search
+# blocks on lang; the 100 TB blocking is chunked-signature banding
+# (split the signature into K+1 chunks; pigeonhole guarantees pairs
+# within hamming distance K share a chunk), which turns the search into
+# an equality join exactly like MinHash banding.
+#
+# Why the 60-bit rung scales: it is the Manku et al. (WWW'07) shape — a
+# 60-bit fingerprint (every bit of the portable hash60), Hamming
+# tolerance K=3, and K+1 = 4 chunks of 15 bits — 32768 buckets per
+# (lang, chunk), so expected collisions per bucket stay ~n^2/2^16 per
+# block: ~40 candidate checks per 1k docs, ~4M at 1M docs/lang —
+# distributed-friendly far past where the 32-bit rung saturates
+# (measured in the r08 scale proof, tools/scale_proof.py: 2.5 s -> 75 s
+# for 10x docs on the 32-bit rung). Pigeonhole banding only works when
+# chunk width beats log2(n per block).
 # ---------------------------------------------------------------------------
 
-_SIMHASH_BITS = 32
-_SIMHASH_MOD = 1 << 32
-_HAMMING_MAX = 6
+
+class _Rung(NamedTuple):
+    """One SimHash width: signature bits, the K+1 pigeonhole chunks
+    (shift, width) low-to-high, and the Hamming bound K."""
+
+    bits: int
+    chunks: tuple[tuple[int, int], ...]
+    hamming_max: int
 
 
-def _simhash_spark(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, simhash) from a (doc_id, lang, text) frame."""
+_SIMHASH32 = _Rung(
+    32, ((0, 5), (5, 5), (10, 5), (15, 5), (20, 4), (24, 4), (28, 4)), 6
+)
+_SIMHASH60 = _Rung(60, ((0, 15), (15, 15), (30, 15), (45, 15)), 3)
+
+
+def _simhash_spark(docs: DataFrame, bits: int) -> DataFrame:
+    """(doc_id, lang, simhash) from a (doc_id, lang, text) frame. A doc
+    with no [a-z] token emits no row (explode drops it)."""
     toks = fan_out(docs, "doc_id").select(
         "doc_id",
         "lang",
@@ -1144,51 +1102,53 @@ def _simhash_spark(docs: DataFrame) -> DataFrame:
             F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0))
         ).alias("tok"),
     )
-    h = (hash60(F.col("tok")) % _SIMHASH_MOD).alias("h")
+    h = (hash60(F.col("tok")) % (1 << bits)).alias("h")
     bit_sums = [
         F.sum(
             F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1
         ).alias(f"s{j}")
-        for j in range(_SIMHASH_BITS)
+        for j in range(bits)
     ]
     sums = toks.select("doc_id", "lang", h).groupBy("doc_id", "lang").agg(*bit_sums)
     sig = None
-    for j in range(_SIMHASH_BITS):
+    for j in range(bits):
         term = F.when(F.col(f"s{j}") >= 0, F.lit(1 << j)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
     return sums.select("doc_id", "lang", sig.cast("long").alias("simhash"))
 
 
-def _simhash_sql_cte() -> str:
-    h = f"({hash60_sql('t')} % {_SIMHASH_MOD})"
+def _simhash_sql_cte(bits: int) -> str:
+    """DuckDB rendering of _simhash_spark: CTEs toks{bits}, sums{bits} and
+    sig{bits}(doc_id, lang, simhash)."""
+    h = f"({hash60_sql('t')} % {1 << bits})"
     bit_sums = ", ".join(
         f"list_reduce(list_prepend(0::BIGINT, list_transform(h, x -> "
         f"((x // {1 << j}) % 2) * 2 - 1)), (a, b) -> a + b) AS s{j}"
-        for j in range(_SIMHASH_BITS)
+        for j in range(bits)
     )
     sig = " + ".join(
         f"(CASE WHEN s{j} >= 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(_SIMHASH_BITS)
+        for j in range(bits)
     )
     return f"""
-toks AS (
+toks{bits} AS (
   SELECT doc_id, lang,
          list_transform(regexp_extract_all(lower(text), '[a-z]+'), t -> {h}) AS h
   FROM documents
-), sums AS (
+), sums{bits} AS (
   -- len(h) > 0 mirrors the Spark side, where explode() emits no rows for a
   -- letter-free or NULL text, so the doc never reaches the signature table.
   -- Without it an empty token list reduces every s_j to 0 and the CASE sets
   -- all bits, silently pairing any two empty docs in the same lang.
-  SELECT doc_id, lang, {bit_sums} FROM toks WHERE len(h) > 0
-), sig AS (
-  SELECT doc_id, lang, ({sig})::BIGINT AS simhash FROM sums
+  SELECT doc_id, lang, {bit_sums} FROM toks{bits} WHERE len(h) > 0
+), sig{bits} AS (
+  SELECT doc_id, lang, ({sig})::BIGINT AS simhash FROM sums{bits}
 )"""
 
 
 _SIMHASH_ORACLE = f"""
-WITH {_simhash_sql_cte()}
-SELECT doc_id, simhash FROM sig ORDER BY doc_id
+WITH {_simhash_sql_cte(_SIMHASH32.bits)}
+SELECT doc_id, simhash FROM sig32 ORDER BY doc_id
 """
 
 
@@ -1200,34 +1160,28 @@ SELECT doc_id, simhash FROM sig ORDER BY doc_id
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    return _simhash_spark(docs).select("doc_id", "simhash").orderBy("doc_id")
+    return (
+        _simhash_spark(docs, _SIMHASH32.bits)
+        .select("doc_id", "simhash")
+        .orderBy("doc_id")
+    )
 
 
-# Pigeonhole banding: split the 32-bit signature into HAMMING_MAX+1 = 7
-# chunks. Any pair within hamming distance 6 differs in at most 6 chunks,
-# so at least one chunk is bit-identical — an equality join on
-# (lang, chunk_id, chunk_value) yields a candidate set that provably
-# contains every qualifying pair (recall = 1.0, unlike MinHash bands).
-# The oracle keeps the straightforward all-pairs formulation: banding is
-# a physical-plan optimization with identical results.
-_N_HAMMING_CHUNKS = _HAMMING_MAX + 1
-# 32 bits over 7 chunks: widths 5,5,5,5,4,4,4 (shift, width) low-to-high.
-_HAMMING_CHUNKS: list[tuple[int, int]] = []
-_shift = 0
-for _i in range(_N_HAMMING_CHUNKS):
-    _w = 5 if _i < _SIMHASH_BITS % _N_HAMMING_CHUNKS else 4
-    _HAMMING_CHUNKS.append((_shift, _w))
-    _shift += _w
-assert _shift == _SIMHASH_BITS
-
-
+# Pigeonhole banding: split the signature into K+1 chunks (K = the Hamming
+# bound). Any pair within hamming distance K differs in at most K chunks,
+# so at least one chunk is bit-identical — an equality join on (lang,
+# chunk_id, chunk_value) yields a candidate set that provably contains
+# every qualifying pair (recall = 1.0, unlike MinHash bands). The oracle
+# keeps the straightforward all-pairs formulation: banding is a
+# physical-plan optimization with identical results.
 def _banded_hamming_pairs(
     sig: DataFrame,
-    chunk_spec: list[tuple[int, int]] | None = None,
-    hamming_max: int | None = None,
+    chunk_spec: tuple[tuple[int, int], ...],
+    hamming_max: int,
 ) -> DataFrame:
-    """Candidate-verified near-dup pairs (hamming <= hamming_max) from a
-    (doc_id, lang, simhash) frame, via pigeonhole chunk banding.
+    """Candidate-verified near-dup pairs (doc_a, doc_b, hamming) with
+    hamming <= hamming_max from a (doc_id, lang, simhash) frame, via
+    pigeonhole chunk banding.
 
     Scale shape: explode each signature into len(chunk_spec)
     (chunk_id, chunk_val) keys (a constant fan-out of a 3-column frame,
@@ -1235,12 +1189,8 @@ def _banded_hamming_pairs(
     chunk_val), dedup candidates, verify hamming exactly. Work is
     proportional to true collisions per chunk bucket instead of
     |lang block|^2 — PROVIDED the chunks are wide enough that buckets
-    don't saturate (see the 60-bit variant below for the arithmetic).
+    don't saturate (see the 60-bit rung's arithmetic above).
     """
-    if chunk_spec is None:
-        chunk_spec = _HAMMING_CHUNKS
-    if hamming_max is None:
-        hamming_max = _HAMMING_MAX
     chunks = F.array(
         *[
             F.struct(
@@ -1288,19 +1238,37 @@ def _banded_hamming_pairs(
     )
 
 
-_SIMHASH_PAIRS_ORACLE = f"""
-WITH {_simhash_sql_cte()}
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
-FROM sig a JOIN sig b ON a.lang = b.lang AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAMMING_MAX}
-ORDER BY doc_a, doc_b
-"""
+def _simhash_pairs_sql(rung: _Rung) -> str:
+    """CTE chain ending in pairs(doc_a, doc_b, hamming): the all-pairs
+    oracle of _simhash_pairs at one width."""
+    sig = f"sig{rung.bits}"
+    return f"""{_simhash_sql_cte(rung.bits)},
+pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
+  FROM {sig} a JOIN {sig} b ON a.lang = b.lang AND a.doc_id < b.doc_id
+  WHERE bit_count(xor(a.simhash, b.simhash)) <= {rung.hamming_max}
+)"""
+
+
+def _simhash_pairs(
+    spark: SparkSession, sf_dir: str, rung: _Rung, tag: str
+) -> DataFrame:
+    """(doc_a, doc_b, hamming) near-dup pairs of the corpus at one SimHash
+    width. The signature frame is cached and materialized under `tag`:
+    both sides of the banded self-join (and the verify) read it."""
+    docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    release_caches(tag)  # one-generation discipline
+    sig = _simhash_spark(docs, rung.bits).cache()
+    sig.count()  # materialization barrier (see dedup_ngram_jaccard)
+    track_caches(tag, sig)
+    return _banded_hamming_pairs(sig, rung.chunks, rung.hamming_max)
 
 
 @REGISTRY.register(
     "dedup_simhash_pairs",
-    oracle=_SIMHASH_PAIRS_ORACLE,
+    oracle=f"WITH {_simhash_pairs_sql(_SIMHASH32)}\n"
+    "SELECT * FROM pairs ORDER BY doc_a, doc_b",
     description="SimHash near-dup pairs (hamming <= 6) within lang blocks — semantics rung; see dedup_simhash60_pairs for the scale/default rung",
     # retired from the headline bench in r09 (VERDICT r08 item 7): the r08
     # scale proof measured this configuration anti-scaling (12.9x wall at
@@ -1308,113 +1276,22 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "simhash"),
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    sig = _simhash_spark(docs).cache()  # both join sides share one compute
-    sig.count()  # materialization barrier (see dedup_ngram_jaccard)
-    return _banded_hamming_pairs(sig).orderBy("doc_a", "doc_b")
-
-
-# ---------------------------------------------------------------------------
-# 60-bit SimHash — the SCALE rung of the simhash family (r08).
-#
-# Why the 32-bit/K=6 configuration above cannot be the 100 TB path: its
-# pigeonhole chunks are 4-5 bits wide (16-32 buckets per (lang, chunk)),
-# so bucket populations grow linearly with the corpus and banded
-# candidates grow QUADRATICALLY once n >> 2^5 — measured in the r08
-# scale proof (tools/scale_proof.py): 2.5 s -> 75 s for 10x docs, ~29x,
-# the worst grower in the suite. Pigeonhole banding only works when
-# chunk width beats log2(n per block).
-#
-# This variant is the Manku et al. (WWW'07) shape: a 60-bit fingerprint
-# (every bit of the portable hash60), Hamming tolerance K=3, and
-# K+1 = 4 chunks of 15 bits — 32768 buckets per (lang, chunk), so
-# expected collisions per bucket stay ~n^2/2^16 per block: ~40 candidate
-# checks per 1k docs, ~4M at 1M docs/lang — distributed-friendly far
-# past where the 32-bit rung saturates. All-integer end to end, so the
-# DuckDB oracle replays the exact signatures and the all-pairs gate.
-# ---------------------------------------------------------------------------
-
-_SIMHASH60_BITS = 60
-_HAMMING60_MAX = 3
-_HAMMING60_CHUNKS: list[tuple[int, int]] = [
-    (0, 15), (15, 15), (30, 15), (45, 15)
-]
-
-
-def _simhash60_spark(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, simhash) with the full 60-bit hash60 per token."""
-    toks = fan_out(docs, "doc_id").select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0))
-        ).alias("tok"),
+    return _simhash_pairs(spark, sf_dir, _SIMHASH32, "dedup.simhash").orderBy(
+        "doc_a", "doc_b"
     )
-    h = hash60(F.col("tok")).alias("h")
-    bit_sums = [
-        F.sum(
-            F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1
-        ).alias(f"s{j}")
-        for j in range(_SIMHASH60_BITS)
-    ]
-    sums = toks.select("doc_id", "lang", h).groupBy("doc_id", "lang").agg(*bit_sums)
-    sig = None
-    for j in range(_SIMHASH60_BITS):
-        term = F.when(F.col(f"s{j}") >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        sig = term if sig is None else sig + term
-    return sums.select("doc_id", "lang", sig.cast("long").alias("simhash"))
-
-
-def _simhash60_sql_cte() -> str:
-    h = hash60_sql("t")
-    bit_sums = ", ".join(
-        f"list_reduce(list_prepend(0::BIGINT, list_transform(h, x -> "
-        f"((x // {1 << j}) % 2) * 2 - 1)), (a, b) -> a + b) AS s{j}"
-        for j in range(_SIMHASH60_BITS)
-    )
-    sig = " + ".join(
-        f"(CASE WHEN s{j} >= 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(_SIMHASH60_BITS)
-    )
-    return f"""
-toks60 AS (
-  SELECT doc_id, lang,
-         list_transform(regexp_extract_all(lower(text), '[a-z]+'), t -> {h}) AS h
-  FROM documents
-), sums60 AS (
-  -- len(h) > 0: see the 32-bit CTE — drops letter-free/NULL-text docs to
-  -- match the Spark side's explode(), which emits no rows for them.
-  SELECT doc_id, lang, {bit_sums} FROM toks60 WHERE len(h) > 0
-), sig60 AS (
-  SELECT doc_id, lang, ({sig})::BIGINT AS simhash FROM sums60
-)"""
-
-
-_SIMHASH60_PAIRS_ORACLE = f"""
-WITH {_simhash60_sql_cte()}
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
-FROM sig60 a JOIN sig60 b ON a.lang = b.lang AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAMMING60_MAX}
-ORDER BY doc_a, doc_b
-"""
 
 
 @REGISTRY.register(
     "dedup_simhash60_pairs",
-    oracle=_SIMHASH60_PAIRS_ORACLE,
+    oracle=f"WITH {_simhash_pairs_sql(_SIMHASH60)}\n"
+    "SELECT * FROM pairs ORDER BY doc_a, doc_b",
     description="60-bit SimHash near-dup pairs (hamming <= 3), 15-bit pigeonhole bands — the scale rung",
     headline=True,  # carries the simhash family's headline slot since r09
     tags=("dedup", "simhash", "scale"),
 )
 def dedup_simhash60_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    release_caches("dedup.simhash60")  # one-generation discipline
-    sig = _simhash60_spark(docs).cache()  # both join sides share one compute
-    sig.count()  # materialization barrier (see dedup_ngram_jaccard)
-    track_caches("dedup.simhash60", sig)
-    return _banded_hamming_pairs(
-        sig, _HAMMING60_CHUNKS, _HAMMING60_MAX
+    return _simhash_pairs(
+        spark, sf_dir, _SIMHASH60, "dedup.simhash60"
     ).orderBy("doc_a", "doc_b")
 
 
@@ -1429,34 +1306,36 @@ def dedup_simhash60_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # GraphFrames use); the DuckDB oracle replays it with a recursive CTE.
 # ---------------------------------------------------------------------------
 
-_CC_ORACLE = f"""
-WITH RECURSIVE {_simhash_sql_cte()},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sig a JOIN sig b ON a.lang = b.lang AND a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAMMING_MAX}
-),
-edges AS (
+
+def _cc_sql(vertices: str) -> str:
+    """The recursive-CTE oracle of _cc_labels: CTEs edges, cc and
+    labels(doc_id, component) over a preceding CTE pairs(doc_a, doc_b).
+    Every doc_id of the relation `vertices` gets a label — its own id
+    when it has no pair. Goes inside a WITH RECURSIVE."""
+    return f"""edges AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION ALL
   SELECT doc_b, doc_a FROM pairs
 ),
 cc AS (
-  SELECT doc_id AS v, doc_id AS r FROM documents
+  SELECT doc_id AS v, doc_id AS r FROM {vertices}
   UNION
   SELECT e.b, cc.r FROM cc JOIN edges e ON cc.v = e.a
-)
-SELECT v AS doc_id, min(r) AS component,
-       (CASE WHEN v = min(r) THEN 1 ELSE 0 END) AS is_keeper
-FROM cc GROUP BY v
-ORDER BY doc_id
-"""
+),
+labels AS (
+  SELECT v AS doc_id, min(r) AS component FROM cc GROUP BY v
+)"""
 
 
-def _cc_labels(pairs: DataFrame) -> DataFrame:
-    """(doc_id, component) for every vertex appearing in the (doc_a, doc_b)
-    pair frame, via iterative min-label propagation. Shared by
-    dedup_connected_components and the corpus_near_dedup pipeline."""
+def _cc_labels(pairs: DataFrame, vertices: DataFrame) -> DataFrame:
+    """`vertices` (any frame with a doc_id column) plus `component`: the
+    minimum doc_id of the vertex's connected component in the (doc_a,
+    doc_b) pair graph, via iterative min-label propagation; a vertex in
+    no pair is its own component (coalesce(component, doc_id)).
+
+    Not lazy: the call itself runs Spark jobs — one checkpoint of the
+    edge frame, then one checkpoint and one changed-count per round of
+    four hops, until a round changes no label."""
     edges = checkpoint_df(
         pairs.select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -1509,7 +1388,10 @@ def _cc_labels(pairs: DataFrame) -> DataFrame:
     labels = edges.select(F.col("src").alias("doc_id")).distinct().select(
         "doc_id", F.col("doc_id").alias("component")
     )
-    for _ in range(10):  # 4 hops/round: handles diameter ~40 worst case
+    # No round cap: labels only ever decrease, so a round that changes
+    # nothing is reached after ceil(diameter / 4) + 1 rounds at most, and
+    # stopping earlier would return wrong (unconverged) components.
+    while True:
         # the checkpoint truncates the lineage: without it each round's
         # plan nests the previous one and planning blows up exponentially.
         # checkpoint_df is executor-local by default; SPARKSM_CHECKPOINT_DIR
@@ -1522,12 +1404,46 @@ def _cc_labels(pairs: DataFrame) -> DataFrame:
         labels = stepped.drop("changed")
         if changed == 0:
             break
-    return labels
+    return vertices.join(labels, "doc_id", "left").select(
+        *vertices.columns,
+        F.coalesce(F.col("component"), F.col("doc_id")).alias("component"),
+    )
+
+
+def _simhash_components(
+    spark: SparkSession, sf_dir: str, rung: _Rung, tag: str
+) -> DataFrame:
+    """(doc_id, component, is_keeper) for every document: connected
+    components of one SimHash rung's pair graph, the lowest doc_id of
+    each component kept."""
+    pairs = _simhash_pairs(spark, sf_dir, rung, tag).select("doc_a", "doc_b")
+    docs = table(spark, sf_dir, "documents").select("doc_id")
+    return (
+        _cc_labels(pairs, docs)
+        .withColumn(
+            "is_keeper",
+            F.when(F.col("doc_id") == F.col("component"), 1)
+            .otherwise(0)
+            .cast("long"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+def _simhash_cc_oracle(rung: _Rung) -> str:
+    return f"""
+WITH RECURSIVE {_simhash_pairs_sql(rung)},
+{_cc_sql("documents")}
+SELECT doc_id, component,
+       (CASE WHEN doc_id = component THEN 1 ELSE 0 END) AS is_keeper
+FROM labels
+ORDER BY doc_id
+"""
 
 
 @REGISTRY.register(
     "dedup_connected_components",
-    oracle=_CC_ORACLE,
+    oracle=_simhash_cc_oracle(_SIMHASH32),
     description="duplicate-cluster resolution: connected components by min-label propagation (32-bit semantics rung; see dedup_connected_components60 for the scale/headline rung)",
     # r13: headline slot ceded to dedup_connected_components60. The x100
     # sitting for THIS rung died on shuffle-spill disk exhaustion (>78 GB)
@@ -1538,52 +1454,12 @@ def _cc_labels(pairs: DataFrame) -> DataFrame:
     tags=("dedup", "graph", "iterative"),
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    sig = _simhash_spark(docs)
-    # pair mining via the same pigeonhole-banded candidate join the pairs
-    # query uses — identical result set, never quadratic in a lang block
-    labels = _cc_labels(_banded_hamming_pairs(sig).select("doc_a", "doc_b"))
-    out = docs.select("doc_id").join(labels, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id")).alias("component"),
-    )
-    return out.select(
-        "doc_id",
-        "component",
-        F.when(F.col("doc_id") == F.col("component"), 1)
-        .otherwise(0)
-        .cast("long")
-        .alias("is_keeper"),
-    ).orderBy("doc_id")
-
-
-_CC60_ORACLE = f"""
-WITH RECURSIVE {_simhash60_sql_cte()},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sig60 a JOIN sig60 b ON a.lang = b.lang AND a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAMMING60_MAX}
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-cc AS (
-  SELECT doc_id AS v, doc_id AS r FROM documents
-  UNION
-  SELECT e.b, cc.r FROM cc JOIN edges e ON cc.v = e.a
-)
-SELECT v AS doc_id, min(r) AS component,
-       (CASE WHEN v = min(r) THEN 1 ELSE 0 END) AS is_keeper
-FROM cc GROUP BY v
-ORDER BY doc_id
-"""
+    return _simhash_components(spark, sf_dir, _SIMHASH32, "dedup.cc")
 
 
 @REGISTRY.register(
     "dedup_connected_components60",
-    oracle=_CC60_ORACLE,
+    oracle=_simhash_cc_oracle(_SIMHASH60),
     description="duplicate-cluster resolution on the 60-bit SimHash scale rung: connected components by min-label propagation",
     headline=True,  # carries the CC headline slot since r13 (rung swap)
     tags=("dedup", "graph", "iterative", "scale"),
@@ -1591,34 +1467,13 @@ ORDER BY doc_id
 def dedup_connected_components60(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CC resolution over the DEFAULT simhash rung (60-bit signatures,
     15-bit pigeonhole bands, hamming <= 3) — the composition you would
-    actually run at corpus scale. Same _cc_labels min-label propagation
-    as the 32-bit rung; only the candidate generator differs, and that
-    difference is the whole scale story: the 32-bit rung's 4-5-bit chunks
-    birthday-saturate (its x100 sitting died spilling >78 GB in the
-    candidate join, SCALING.md r13) while the 15-bit bands stay selective
-    two decades out (dedup_simhash60_pairs measured 3.0x at x100)."""
-    docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    release_caches("dedup.cc60")  # one-generation discipline
-    sig = _simhash60_spark(docs).cache()  # banding + verify share one compute
-    sig.count()  # materialization barrier (see dedup_ngram_jaccard)
-    track_caches("dedup.cc60", sig)
-    labels = _cc_labels(
-        _banded_hamming_pairs(sig, _HAMMING60_CHUNKS, _HAMMING60_MAX).select(
-            "doc_a", "doc_b"
-        )
-    )
-    out = docs.select("doc_id").join(labels, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id")).alias("component"),
-    )
-    return out.select(
-        "doc_id",
-        "component",
-        F.when(F.col("doc_id") == F.col("component"), 1)
-        .otherwise(0)
-        .cast("long")
-        .alias("is_keeper"),
-    ).orderBy("doc_id")
+    actually run at corpus scale. Same body as the 32-bit rung; only the
+    candidate generator's geometry differs, and that difference is the
+    whole scale story: the 32-bit rung's 4-5-bit chunks birthday-saturate
+    (its x100 sitting died spilling >78 GB in the candidate join,
+    SCALING.md r13) while the 15-bit bands stay selective two decades out
+    (dedup_simhash60_pairs measured 3.0x at x100)."""
+    return _simhash_components(spark, sf_dir, _SIMHASH60, "dedup.cc60")
 
 
 # ---------------------------------------------------------------------------
@@ -1707,29 +1562,17 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _NEAR_DEDUP_ORACLE = f"""
 WITH RECURSIVE {_MINHASH_CTES},
-p AS (
+pairs AS (
 {_MINHASH_PAIRS_SELECT}
 ),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM p
-  UNION ALL
-  SELECT doc_b, doc_a FROM p
-),
-cc AS (
-  SELECT doc_id AS v, doc_id AS r FROM documents
-  UNION
-  SELECT e.b, cc.r FROM cc JOIN edges e ON cc.v = e.a
-),
-lab AS (
-  SELECT v AS doc_id, min(r) AS component FROM cc GROUP BY v
-)
+{_cc_sql("documents")}
 SELECT d.source,
        count(*) AS n_docs,
        CAST(sum(CASE WHEN l.component = d.doc_id THEN 1 ELSE 0 END) AS BIGINT)
            AS n_keep,
        CAST(sum(CASE WHEN l.component <> d.doc_id THEN 1 ELSE 0 END) AS BIGINT)
            AS n_drop
-FROM documents d JOIN lab l ON d.doc_id = l.doc_id
+FROM documents d JOIN labels l ON d.doc_id = l.doc_id
 GROUP BY d.source
 ORDER BY d.source
 """
@@ -1747,12 +1590,8 @@ ORDER BY d.source
 )
 def corpus_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _minhash_verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = _cc_labels(pairs)
-    docs = table(spark, sf_dir, "documents").select("doc_id", "source")
-    resolved = docs.join(labels, "doc_id", "left").select(
-        "doc_id",
-        "source",
-        F.coalesce(F.col("component"), F.col("doc_id")).alias("component"),
+    resolved = _cc_labels(
+        pairs, table(spark, sf_dir, "documents").select("doc_id", "source")
     )
     keep = F.when(F.col("component") == F.col("doc_id"), 1).otherwise(0)
     return (
@@ -1935,14 +1774,11 @@ ORDER BY source
     tags=("dedup", "lsh", "sampling", "quality", "scale"),
 )
 def fuzzy_decontamination_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = fan_out(
-        table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
-    ).select(
-        "doc_id",
-        F.transform(
-            F.array_distinct(char_shingles("text", _JACCARD_K)),
-            lambda s: hash60(s),
-        ).alias("h60"),
+    docs = _shingled_h60(
+        fan_out(
+            table(spark, sf_dir, "documents").select("doc_id", "text"),
+            "doc_id",
+        )
     )
     bands = _band_rows(_minhash_sigs(docs))
     eval_keys = (
@@ -2890,28 +2726,13 @@ def _clsplit_is_test_sql(expr: str) -> str:
 
 
 _CLSPLIT_ORACLE = f"""
-WITH RECURSIVE {_simhash60_sql_cte()},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sig60 a JOIN sig60 b ON a.lang = b.lang AND a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAMMING60_MAX}
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-cc AS (
-  SELECT doc_id AS v, doc_id AS r FROM documents
-  UNION
-  SELECT e.b, cc.r FROM cc JOIN edges e ON cc.v = e.a
-),
-comp AS (SELECT v AS doc_id, min(r) AS component FROM cc GROUP BY v),
+WITH RECURSIVE {_simhash_pairs_sql(_SIMHASH60)},
+{_cc_sql("documents")},
 t AS (
   SELECT doc_id, component,
          {_clsplit_is_test_sql('doc_id')} AS nt,
          {_clsplit_is_test_sql('component')} AS ct
-  FROM comp
+  FROM labels
 ),
 pl AS (
   SELECT a.nt AS ant, b.nt AS bnt, a.ct AS act, b.ct AS bct
@@ -2939,21 +2760,15 @@ FROM pl
     tags=("dedup", "sampling", "scale"),
 )
 def cluster_aware_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    release_caches("dedup.clsplit")  # one-generation discipline
-    sig = _simhash60_spark(docs).cache()
-    sig.count()  # materialization barrier (see dedup_ngram_jaccard)
     pairs = (
-        _banded_hamming_pairs(sig, _HAMMING60_CHUNKS, _HAMMING60_MAX)
+        _simhash_pairs(spark, sf_dir, _SIMHASH60, "dedup.clsplit")
         .select("doc_a", "doc_b")
         .cache()
     )
     pairs.count()  # two consumers: the CC miner and the leak counts
-    track_caches("dedup.clsplit", sig, pairs)
-    labels = _cc_labels(pairs)
-    comp = docs.select("doc_id").join(labels, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id")).alias("component"),
+    track_caches("dedup.clsplit", pairs)
+    comp = _cc_labels(
+        pairs, table(spark, sf_dir, "documents").select("doc_id")
     )
 
     def is_test(col):

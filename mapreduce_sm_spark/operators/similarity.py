@@ -42,6 +42,7 @@ from mapreduce_sm_spark.functions.vectors import (
     norm_sql,
 )
 from mapreduce_sm_spark.functions.hashing import hash60_sql
+from mapreduce_sm_spark.operators.dedup import _cc_labels, _cc_sql
 from mapreduce_sm_spark.registry import REGISTRY
 from mapreduce_sm_spark.session import fan_out, table
 
@@ -1262,7 +1263,7 @@ WITH RECURSIVE e AS (
   FROM embeddings
 ),
 pairs AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
+  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
   FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
   WHERE ({" OR ".join(
     f"{_band_val_sql('a.bucket', k)} = {_band_val_sql('b.bucket', k)}"
@@ -1270,19 +1271,10 @@ pairs AS (
   )})
     AND {cosine_sql('a.embedding', 'b.embedding')} >= {_PAIRS_THRESHOLD}
 ),
-edges AS (
-  SELECT vec_a AS a, vec_b AS b FROM pairs
-  UNION ALL
-  SELECT vec_b, vec_a FROM pairs
-),
-cc AS (
-  SELECT vec_id AS v, vec_id AS r FROM embeddings
-  UNION
-  SELECT ed.b, cc.r FROM cc JOIN edges ed ON cc.v = ed.a
-)
-SELECT v AS vec_id, min(r) AS component,
-       (CASE WHEN v = min(r) THEN 1 ELSE 0 END) AS is_keeper
-FROM cc GROUP BY v
+{_cc_sql("(SELECT vec_id AS doc_id FROM embeddings)")}
+SELECT doc_id AS vec_id, component,
+       (CASE WHEN doc_id = component THEN 1 ELSE 0 END) AS is_keeper
+FROM labels
 ORDER BY vec_id
 """
 
@@ -1297,29 +1289,24 @@ ORDER BY vec_id
     tags=("similarity", "dedup", "graph", "lsh", "iterative"),
 )
 def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreduce_sm_spark.operators.dedup import _cc_labels
-
     pairs = embedding_similar_pairs(spark, sf_dir).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
-    labels = _cc_labels(pairs)
-    vecs = table(spark, sf_dir, "embeddings").select("vec_id")
-    out = vecs.join(
-        labels.select(F.col("doc_id").alias("vec_id"), "component"),
-        "vec_id",
-        "left",
-    ).select(
-        "vec_id",
-        F.coalesce(F.col("component"), F.col("vec_id")).alias("component"),
+    vecs = table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("doc_id")
     )
-    return out.select(
-        "vec_id",
-        "component",
-        F.when(F.col("vec_id") == F.col("component"), 1)
-        .otherwise(0)
-        .cast("long")
-        .alias("is_keeper"),
-    ).orderBy("vec_id")
+    return (
+        _cc_labels(pairs, vecs)
+        .select(
+            F.col("doc_id").alias("vec_id"),
+            "component",
+            F.when(F.col("doc_id") == F.col("component"), 1)
+            .otherwise(0)
+            .cast("long")
+            .alias("is_keeper"),
+        )
+        .orderBy("vec_id")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -379,7 +379,7 @@ def fan_out(df, *keys: str):
 _CHECKPOINT_DIR_SET = False
 
 
-def checkpoint_df(df, eager: bool = True):
+def checkpoint_df(df):
     """Lineage-truncating checkpoint for iterative algorithms, with a
     cluster-real switch.
 
@@ -392,12 +392,12 @@ def checkpoint_df(df, eager: bool = True):
     df.checkpoint() into that directory — no code change."""
     ckpt_dir = os.environ.get("SPARKSM_CHECKPOINT_DIR")
     if not ckpt_dir:
-        return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint(eager=True)
     global _CHECKPOINT_DIR_SET
     if not _CHECKPOINT_DIR_SET:
         df.sparkSession.sparkContext.setCheckpointDir(ckpt_dir)
         _CHECKPOINT_DIR_SET = True
-    return df.checkpoint(eager=eager)
+    return df.checkpoint(eager=True)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str):

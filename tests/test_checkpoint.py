@@ -15,6 +15,12 @@ def _tiny_pairs(spark):
     )
 
 
+def _tiny_vertices(spark):
+    return spark.createDataFrame(
+        [(v,) for v in (1, 2, 3, 10, 11)], "doc_id long"
+    )
+
+
 def _expected_labels():
     return {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
@@ -23,7 +29,8 @@ def test_local_checkpoint_default(spark, monkeypatch):
     from mapreduce_sm_spark.operators.dedup import _cc_labels
 
     monkeypatch.delenv("SPARKSM_CHECKPOINT_DIR", raising=False)
-    got = {r.doc_id: r.component for r in _cc_labels(_tiny_pairs(spark)).collect()}
+    labels = _cc_labels(_tiny_pairs(spark), _tiny_vertices(spark))
+    got = {r.doc_id: r.component for r in labels.collect()}
     assert got == _expected_labels()
 
 
@@ -35,7 +42,8 @@ def test_reliable_checkpoint_dir(spark, monkeypatch, tmp_path):
     monkeypatch.setenv("SPARKSM_CHECKPOINT_DIR", ckpt)
     monkeypatch.setattr(sess, "_CHECKPOINT_DIR_SET", False)
 
-    got = {r.doc_id: r.component for r in _cc_labels(_tiny_pairs(spark)).collect()}
+    labels = _cc_labels(_tiny_pairs(spark), _tiny_vertices(spark))
+    got = {r.doc_id: r.component for r in labels.collect()}
     assert got == _expected_labels()
 
     # reliable checkpoints must have landed under the configured directory
