@@ -1300,10 +1300,19 @@ def dedup_simhash60_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # After pair mining, a training pipeline must pick ONE canonical doc per
 # duplicate CLUSTER (pairs alone over-delete: a~b, b~c must collapse to a
 # single keeper even if a!~c). Components via iterative min-label
-# propagation — each round is one join + one aggregate, converging in
-# O(graph diameter) rounds; the driver holds only a changed-count scalar.
-# This is the standard large-graph CC pattern (the same shape GraphX/
-# GraphFrames use); the DuckDB oracle replays it with a recursive CTE.
+# propagation over a checkpointed ARC frame: both orientations of every
+# pair plus a self-loop (v, v) on every vertex that is in a pair. The
+# self-loops make a vertex's own label one of its incoming arcs, so a hop
+# reads the label frame exactly once: one join (arcs x labels on src) +
+# one aggregate (min per dst), which also emits `old` — the label the
+# self-loop carried — so convergence is `component < old` with no join
+# back onto the previous labels. Round plans therefore grow linearly in
+# hops: four hops plan 9 exchanges, where reading the labels twice per
+# hop would nest 2^4 copies of them. Each round costs one checkpoint and
+# one changed-count, and the driver holds only that count. This is the
+# per-round MapReduce CC shape (Kiveris et al., "Connected Components in
+# MapReduce and Beyond", SoCC'14); the DuckDB oracle replays the closure
+# with a recursive CTE.
 # ---------------------------------------------------------------------------
 
 
@@ -1327,81 +1336,98 @@ labels AS (
 )"""
 
 
+def _cc_arcs(pairs: DataFrame) -> DataFrame:
+    """The checkpointed arc frame (src, dst) of _cc_labels, built in one
+    pass over `pairs`: (a, b), (b, a), (a, a) and (b, b) per pair,
+    deduplicated — 2*|pairs| + |vertices in a pair| rows at most. The
+    self-loops make every vertex's own label one of its incoming arcs.
+
+    The non-null filter shapes the plan; it drops no vertex (a NULL id
+    never matches a join key). The checkpoint carries its constraint, so
+    no hop infers a Filter of its own above the arc scan: every hop of a
+    round scans the arcs identically, and AQE shuffles them once per
+    round and reuses that exchange in the other hops. No repartition on
+    src: a frame checkpointed from an adaptive plan reports
+    UnknownPartitioning, so no hop could use it."""
+
+    def arc(src: str, dst: str):
+        return F.struct(F.col(src).alias("src"), F.col(dst).alias("dst"))
+
+    return checkpoint_df(
+        pairs.select(
+            F.inline(
+                F.array(
+                    arc("doc_a", "doc_b"),
+                    arc("doc_b", "doc_a"),
+                    arc("doc_a", "doc_a"),
+                    arc("doc_b", "doc_b"),
+                )
+            )
+        )
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+    )  # mine pairs once; every hop re-reads the checkpointed blocks
+
+
+def _min_label_hop(arcs: DataFrame, labels: DataFrame | None) -> DataFrame:
+    """One min-label hop: (doc_id, component, old) for every dst of the
+    self-looped arc frame `arcs(src, dst)`. `component` is the minimum
+    label over the vertex's incoming arcs; `old` is the label its self-
+    loop carried, i.e. its label before the hop. `labels(doc_id,
+    component)` is read once, in the join on src. With labels None every
+    vertex starts as its own label, so the hop is min(src) per dst and
+    joins nothing."""
+    if labels is None:
+        carried = arcs.withColumn("c", F.col("src"))
+    else:
+        carried = arcs.join(
+            labels.select(
+                F.col("doc_id").alias("src"), F.col("component").alias("c")
+            ),
+            "src",
+        )
+    return carried.groupBy(F.col("dst").alias("doc_id")).agg(
+        F.min("c").alias("component"),
+        F.min(F.when(F.col("src") == F.col("dst"), F.col("c"))).alias("old"),
+    )
+
+
 def _cc_labels(pairs: DataFrame, vertices: DataFrame) -> DataFrame:
     """`vertices` (any frame with a doc_id column) plus `component`: the
     minimum doc_id of the vertex's connected component in the (doc_a,
     doc_b) pair graph, via iterative min-label propagation; a vertex in
     no pair is its own component (coalesce(component, doc_id)).
 
-    Not lazy: the call itself runs Spark jobs — one checkpoint of the
-    edge frame, then one checkpoint and one changed-count per round of
-    four hops, until a round changes no label."""
-    edges = checkpoint_df(
-        pairs.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        .unionAll(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        # hash-partition on src BEFORE the checkpoint: the checkpointed
-        # frame reports that partitioning, so every hop's join against
-        # the label frame satisfies its edge-side distribution
-        # requirement for free and only the vertex-sized label frame
-        # moves per hop (same r12 rework as pagerank_int — without this
-        # the edge frame re-shuffled up to hops x rounds times)
-        .repartition("src")
-    )  # mine pairs once; iterations re-read the checkpointed blocks
+    Labels live only on vertices that are in a pair, over the self-looped
+    arc frame of _cc_arcs. Every hop is one join and one aggregate
+    (_min_label_hop); the first needs no label frame.
 
-    def propagate(lbl: DataFrame) -> DataFrame:
-        """One min-label hop: fold each vertex's neighborhood minimum into
-        its label. Also emits `changed` so convergence needs no extra join."""
-        nbr_min = (
-            edges.join(
-                lbl.select(
-                    F.col("doc_id").alias("src"),
-                    F.col("component").alias("src_comp"),
-                ),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.min("src_comp").alias("nbr_comp"))
-        )
-        return lbl.join(nbr_min, lbl.doc_id == nbr_min.dst, "left").select(
-            "doc_id",
-            F.least(
-                F.col("component"),
-                F.coalesce(F.col("nbr_comp"), F.col("component")),
-            ).alias("component"),
-            (F.col("nbr_comp") < F.col("component")).alias("changed"),
-        )
+    Not lazy: the call itself runs Spark jobs — one checkpoint of the arc
+    frame, then one checkpoint of the labels and one changed-count per
+    round of four hops, until a round's last hop changes no label (its
+    `old` column equals `component` on every vertex)."""
+    arcs = _cc_arcs(pairs)
 
-    # Iterate ONLY over vertices that have at least one edge — isolated
-    # docs (the vast majority of a deduped corpus) are their own component
-    # by definition and rejoin at the end. Each outer round runs FOUR hops
-    # before materializing: the dominant cost of a round locally is its
-    # fixed barrier overhead (checkpoint + convergence action), not the
-    # per-hop shuffles of the small label frame, so batching hops halves
-    # wall time vs 2 hops/round (measured 15.2 s -> 7.7 s at sf0.1; near-dup
-    # clusters have small diameter, so round 1 converges almost everything
-    # and round 2 proves it). The driver only ever holds a changed-count
-    # scalar, never row data.
-    labels = edges.select(F.col("src").alias("doc_id")).distinct().select(
-        "doc_id", F.col("doc_id").alias("component")
-    )
-    # No round cap: labels only ever decrease, so a round that changes
-    # nothing is reached after ceil(diameter / 4) + 1 rounds at most, and
-    # stopping earlier would return wrong (unconverged) components.
+    # Each round runs FOUR hops before materializing: the dominant cost
+    # of a round locally is its fixed barrier overhead — the checkpoint
+    # and the changed-count, about ten small jobs with their AQE stage
+    # jobs — not the per-hop shuffle of the small label frame. Near-dup
+    # clusters have small diameter, so one round usually converges: when
+    # its fourth hop changes no label, that hop is itself the proof. No
+    # round cap: labels only ever decrease, so a hop that changes nothing
+    # is reached within ceil((diameter + 1) / 4) rounds, and stopping
+    # earlier would return wrong (unconverged) components.
+    labels = None
     while True:
-        # the checkpoint truncates the lineage: without it each round's
-        # plan nests the previous one and planning blows up exponentially.
-        # checkpoint_df is executor-local by default; SPARKSM_CHECKPOINT_DIR
-        # switches it to reliable checkpoint() storage for cluster runs
-        stepped = labels
         for _hop in range(3):
-            stepped = propagate(stepped).drop("changed")
-        stepped = checkpoint_df(propagate(stepped))
-        changed = stepped.filter(F.col("changed")).count()
-        labels = stepped.drop("changed")
+            labels = _min_label_hop(arcs, labels).drop("old")
+        # the checkpoint truncates the lineage, so each round plans only
+        # its own four hops. checkpoint_df is executor-local by default;
+        # SPARKSM_CHECKPOINT_DIR switches it to reliable checkpoint()
+        # storage for cluster runs
+        labels = checkpoint_df(_min_label_hop(arcs, labels))
+        changed = labels.filter(F.col("component") < F.col("old")).count()
+        labels = labels.drop("old")
         if changed == 0:
             break
     return vertices.join(labels, "doc_id", "left").select(
@@ -2710,11 +2736,11 @@ def winnowing_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # longer an exact per-doc 10%).
 #
 # 100 TB posture: inherits the measured 60-bit banded candidate join
-# (dedup_simhash60_pairs: 3.0x at x100) and _cc_labels' node-sized
-# label-propagation exchanges; both split assignments are row-local
-# hash60 expressions; the leak counts are two aggregates over the
-# pair frame joined to the vertex-sized component frame. The audit
-# digest is one row.
+# (dedup_simhash60_pairs: 3.0x at x100) and _cc_labels' vertex-sized
+# label exchanges (one arc shuffle per round); both split assignments
+# are row-local hash60 expressions; the leak counts are two aggregates
+# over the pair frame joined to the vertex-sized component frame. The
+# audit digest is one row.
 # ---------------------------------------------------------------------------
 
 _CLSPLIT_SALT = "clsplit"

@@ -1244,8 +1244,8 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a pipeline runs when it wants cluster-level semantic dedup with an
 # auditable, engine-exact result rather than an index-dependent one.
 # 100 TB shape: banded equality joins for candidates (never all-pairs),
-# co-partitioned label propagation (edge frame checkpointed hash-
-# partitioned on src; only vertex-sized frames move per hop).
+# label propagation over a checkpointed arc frame (one arc shuffle per
+# round of four hops; one vertex-sized label exchange per hop).
 #
 # RUNG DIVISION (measured, SCALING.md r13): this is the AUDIT rung — its
 # 8-plane/4x2-bit band geometry is frozen into the oracle string, and

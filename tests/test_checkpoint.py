@@ -56,13 +56,17 @@ def test_reliable_checkpoint_dir(spark, monkeypatch, tmp_path):
 
 
 def test_checkpoint_preserves_hash_partitioning(spark):
-    """Pins the load-bearing assumption behind the r12 co-partitioned
-    label loop (_cc_labels) and pagerank edge frame: a frame
-    repartition()ed on a key and THEN checkpointed still reports that
-    hash partitioning, so a later equi-join on the key adds no exchange
-    on the checkpointed side. If a Spark upgrade ever drops the
-    partitioning across checkpoint, the iterative loops silently regress
-    to re-shuffling their edge frames every hop — this test fails first."""
+    """Pins the arc side of a connected-components hop (_min_label_hop
+    over the checkpointed arc frame of _cc_labels; the pagerank edge
+    frame takes the same join): a small label frame joined to a
+    checkpointed (src, dst) frame on src and aggregated on dst adds no
+    exchange on the checkpointed side, so the only hash exchange left is
+    the dst aggregate's. What keeps the arc side in place is the
+    broadcast of the small label side, not the repartition on src: Spark
+    reports UnknownPartitioning for a frame checkpointed from an adaptive
+    plan, so a sort-merge join against it does shuffle it on src (once
+    per round in _cc_labels, as tests/test_dedup_kernels.py guards). The
+    test keeps its historical name."""
     from pyspark.sql import functions as F
 
     from mapreduce_sm_spark.session import checkpoint_df
