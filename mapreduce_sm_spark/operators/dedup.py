@@ -46,7 +46,6 @@ from __future__ import annotations
 from typing import NamedTuple
 
 from pyspark import StorageLevel
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -794,19 +793,6 @@ def dedup_minhash_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COMPACT_MOD = 1_000_000_007
 
-_MINHASH_COMPACT_ORACLE = f"""
-WITH {_MINHASH_CTES}
-SELECT CAST(count(*) AS BIGINT) AS n_index_rows,
-       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-       CAST(sum(bh % {_COMPACT_MOD}) AS BIGINT) AS sum_bh_mod,
-       CAST(sum((doc_id * 31 + band_idx) % {_COMPACT_MOD}) AS BIGINT)
-           AS sum_key_band_mod,
-       CAST(0 AS BIGINT) AS n_mismatch,
-       true AS compact_equals_rebuild
-FROM bands
-"""
-
-
 def _compaction_merged_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, str]:
@@ -858,6 +844,23 @@ def _index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _index_digest_oracle(flag_name: str) -> str:
+    """DuckDB twin of _index_digest_audit: the digest of a from-scratch
+    rebuild, whose audit is clean by definition (n_mismatch 0, flag
+    true)."""
+    return f"""
+WITH {_MINHASH_CTES}
+SELECT CAST(count(*) AS BIGINT) AS n_index_rows,
+       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+       CAST(sum(bh % {_COMPACT_MOD}) AS BIGINT) AS sum_bh_mod,
+       CAST(sum((doc_id * 31 + band_idx) % {_COMPACT_MOD}) AS BIGINT)
+           AS sum_key_band_mod,
+       CAST(0 AS BIGINT) AS n_mismatch,
+       true AS {flag_name}
+FROM bands
+"""
+
+
 def _index_digest_audit(
     maintained: DataFrame, rebuild: DataFrame, flag_name: str
 ) -> DataFrame:
@@ -901,7 +904,7 @@ def _index_digest_audit(
 
 @REGISTRY.register(
     "dedup_minhash_compaction",
-    oracle=_MINHASH_COMPACT_ORACLE,
+    oracle=_index_digest_oracle("compact_equals_rebuild"),
     description="band-index compaction law: merge(stored index, delta index) rewritten to parquet == from-scratch rebuild",
     tags=("dedup", "lsh", "incremental", "persist", "scale"),
 )
@@ -939,22 +942,9 @@ def dedup_minhash_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the audit is the same index-sized spot check as the compaction law.
 # ---------------------------------------------------------------------------
 
-_STREAM_IDX_ORACLE = f"""
-WITH {_MINHASH_CTES}
-SELECT CAST(count(*) AS BIGINT) AS n_index_rows,
-       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-       CAST(sum(bh % {_COMPACT_MOD}) AS BIGINT) AS sum_bh_mod,
-       CAST(sum((doc_id * 31 + band_idx) % {_COMPACT_MOD}) AS BIGINT)
-           AS sum_key_band_mod,
-       CAST(0 AS BIGINT) AS n_mismatch,
-       true AS stream_equals_batch
-FROM bands
-"""
-
-
 @REGISTRY.register(
     "stream_minhash_index_equality",
-    oracle=_STREAM_IDX_ORACLE,
+    oracle=_index_digest_oracle("stream_equals_batch"),
     description="streamed band-index maintenance: micro-batch appends through the exactly-once file sink == batch rebuild",
     tags=("streaming", "dedup", "lsh", "persist", "scale"),
 )
@@ -976,72 +966,18 @@ def _stream_maintained_index(
     """Runs the maintenance stream; returns (committed store frame, base
     dir) — the base is exposed so tests can assert the file sink really
     committed MULTIPLE appends (one per feed part file)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    from mapreduce_sm_spark.streaming.runner import replay_stream, run_file_sink
 
-    from mapreduce_sm_spark.streaming.sketch_stream import (
-        documents_text_stream,
-    )
-
-    # mkdtemp + atexit (the stream_sink_roundtrip rule): a fixed per-sf
-    # path with rmtree-on-entry would let one run destroy another's
-    # in-flight sink/checkpoint
-    base = tempfile.mkdtemp(prefix="mh_stream_idx_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    feed_dir, sink, ckpt = (
-        os.path.join(base, "documents.parquet"),
-        os.path.join(base, "index"),
-        os.path.join(base, "ckpt"),
-    )
     # arrival simulation: the corpus lands as 4 part files; one file per
     # trigger => the sink commits (up to) 4 separate appends
-    table(spark, sf_dir, "documents").select("doc_id", "text").repartition(
-        4
-    ).write.mode("overwrite").parquet(feed_dir)
-
-    stream = documents_text_stream(
-        spark,
-        base,
-        glob="documents.parquet",
-        max_files_per_trigger=1,
-        columns=("doc_id", "text"),
+    stream, base = replay_stream(
+        table(spark, sf_dir, "documents").select("doc_id", "text"),
+        "mh_stream_idx_",
+        4,
+        1,
     )
     bands = _band_rows(_minhash_sigs(_shingled_h60(stream)))
-    q = (
-        bands.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):  # a timeout must be LOUD: a prefix
-        q.stop()  # of the batches would surface as a confusing mismatch
-        raise RuntimeError(
-            "stream_minhash_index_equality: stream did not finish in 120s"
-        )
-    # spark.read honors the sink's _spark_metadata manifest: only
-    # COMMITTED files are read back. An empty corpus commits no batch —
-    # fall back to an empty frame of the sink schema so the contract row
-    # still emits (n_index_rows 0, audit trivially clean). Only the two
-    # "no committed files" conditions are a legitimate empty state; a
-    # transient read failure on a NON-empty sink must surface here, not
-    # resurface later as a confusing n_mismatch > 0 audit failure
-    # (ADVICE r12 — same narrow catch as streaming/windows.py).
-    try:
-        maintained = spark.read.parquet(sink)
-    except AnalysisException as e:
-        if (e.getCondition() or "") not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        maintained = spark.createDataFrame(
-            [], "doc_id bigint, band_idx int, bh bigint"
-        )
-    return maintained, base
+    return run_file_sink(bands, base, "stream_minhash_index_equality"), base
 
 
 # ---------------------------------------------------------------------------
@@ -2194,15 +2130,10 @@ def _decon_partial_counts_arrow(batches):
 def stream_decontamination_equality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import atexit
     import os as _os
-    import shutil
-    import tempfile
 
     from mapreduce_sm_spark.functions.text import tokenize_words
-    from mapreduce_sm_spark.streaming.sketch_stream import (
-        documents_text_stream,
-    )
+    from mapreduce_sm_spark.streaming.runner import replay_stream, run_file_sink
 
     n = _XNGRAM_N
     docs = table(spark, sf_dir, "documents").select(
@@ -2222,15 +2153,8 @@ def stream_decontamination_equality(
 
     eval_grams_guarded = _eval_gram_static(docs, gram_hashes)
 
-    base = tempfile.mkdtemp(prefix="decon_stream_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    feed_dir, sink, ckpt = (
-        _os.path.join(base, "documents.parquet"),
-        _os.path.join(base, "decon"),
-        _os.path.join(base, "ckpt"),
-    )
     # 8 part files consumed 2 per trigger => 4 separate sink commits
-    docs.repartition(8).write.mode("overwrite").parquet(feed_dir)
+    stream, base = replay_stream(docs, "decon_stream_", 8, 2)
     # The eval gram set is a PRECOMPUTED ARTIFACT, not a per-trigger
     # subquery: a stream-static join re-evaluates the static subplan on
     # EVERY micro-batch, so leaving the collect_set aggregate inline
@@ -2244,13 +2168,6 @@ def stream_decontamination_equality(
     ev_path = _os.path.join(base, "eval_grams.parquet")
     eval_grams_guarded.write.mode("overwrite").parquet(ev_path)
     eval_static = spark.read.parquet(ev_path)
-    stream = documents_text_stream(
-        spark,
-        base,
-        glob="documents.parquet",
-        max_files_per_trigger=2,
-        columns=("doc_id", "source", "text", "n_chars"),
-    )
     flagged = (
         stream.filter(F.col("doc_id") % 10 != 0)
         .select(
@@ -2267,29 +2184,11 @@ def stream_decontamination_equality(
             ),
         )
     )
-    q = (
-        flagged.mapInPandas(_decon_partial_counts_arrow, _DECON_PARTIAL_SCHEMA)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    partials = run_file_sink(
+        flagged.mapInPandas(_decon_partial_counts_arrow, _DECON_PARTIAL_SCHEMA),
+        base,
+        "stream_decontamination_equality",
     )
-    if not q.awaitTermination(120):  # loud, never a silent prefix
-        q.stop()
-        raise RuntimeError(
-            "stream_decontamination_equality: stream did not finish in 120s"
-        )
-    try:
-        partials = spark.read.parquet(sink)
-    except AnalysisException as e:
-        if (e.getCondition() or "") not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        partials = spark.createDataFrame([], _DECON_PARTIAL_SCHEMA)
     counters = (
         "n_train",
         "n_train_excluded",

@@ -1511,18 +1511,14 @@ def _stream_maintained_semantic_index(
     """Runs the maintenance stream; returns (committed store frame,
     batch-twin frame, base dir). Base exposed so tests can assert the
     sink really committed multiple appends."""
-    import atexit
-    import os as _os
-    import shutil
-    import tempfile
+    import os
 
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from mapreduce_sm_spark.streaming.sketch_stream import (
-        documents_text_stream,
+    from mapreduce_sm_spark.session import release_caches, session_tmpdir
+    from mapreduce_sm_spark.streaming.runner import (
+        FEED,
+        replay_stream,
+        run_file_sink,
     )
-
-    from mapreduce_sm_spark.session import release_caches
 
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -1578,17 +1574,8 @@ def _stream_maintained_semantic_index(
         # so both sides are the empty index (contract row still emits:
         # 0 vectors, 0 indexed, 0 mismatches, flag true)
         empty = spark.createDataFrame([], "vec_id bigint, cid int")
-        base = tempfile.mkdtemp(prefix="sem_stream_idx_")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        return empty, empty, base
+        return empty, empty, session_tmpdir("sem_stream_idx_")
 
-    base = tempfile.mkdtemp(prefix="sem_stream_idx_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    feed_dir, sink, ckpt = (
-        _os.path.join(base, "embeddings.parquet"),
-        _os.path.join(base, "index"),
-        _os.path.join(base, "ckpt"),
-    )
     # arrival simulation: the vectors land as 32 part files consumed 8
     # per trigger => the sink commits (up to) 4 separate appends, and
     # each micro-batch runs 8 tasks. Files-per-trigger is the micro-
@@ -1596,40 +1583,11 @@ def _stream_maintained_semantic_index(
     # per file): the 1-file-per-trigger variant ran each x100 append on
     # a single core at the same per-core rate the 32-core batch twin
     # sustains — measured 73 s/append vs ~9 s here, SCALING.md r14.
-    emb.repartition(32).write.mode("overwrite").parquet(feed_dir)
-
-    stream = documents_text_stream(
-        spark,
-        base,
-        glob="embeddings.parquet",
-        max_files_per_trigger=8,
-        columns=("vec_id", "v"),
+    stream, base = replay_stream(emb, "sem_stream_idx_", 32, 8)
+    maintained = run_file_sink(
+        _cells(stream), base, "stream_semantic_index_equality"
     )
-
-    q = (
-        _cells(stream)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):  # a timeout must be LOUD: a prefix
-        q.stop()  # of the batches would surface as a confusing mismatch
-        raise RuntimeError(
-            "stream_semantic_index_equality: stream did not finish in 120s"
-        )
-    try:
-        maintained = spark.read.parquet(sink)
-    except AnalysisException as e:
-        if (e.getCondition() or "") not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        maintained = spark.createDataFrame([], "vec_id bigint, cid int")
-    batch_twin = _cells(spark.read.parquet(feed_dir))
+    batch_twin = _cells(spark.read.parquet(os.path.join(base, FEED)))
     return maintained, batch_twin, base
 
 

@@ -786,17 +786,16 @@ ORDER BY j
 )
 def stream_countmin_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per hash row j: (row_mass, cells_within_w, stream_equals_batch)."""
-    import os
-
     from mapreduce_sm_spark.functions.text import tokenize_words
     from mapreduce_sm_spark.session import fan_out
+    from mapreduce_sm_spark.streaming.runner import sink_name
     from mapreduce_sm_spark.streaming.sketch_stream import run_stream_countmin
 
     docs = table(spark, sf_dir, "documents").select("text")
     toks = fan_out(docs).select(F.explode(tokenize_words("text")).alias("token"))
     batch = _cm_sketch(toks, _CM_W_LARGE).alias("ba")
 
-    qname = "stream_cm_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    qname = sink_name("stream_cm_", sf_dir)
     streamed = run_stream_countmin(
         spark, sf_dir, _CM_W_LARGE, _CM_D, query_name=qname
     ).alias("st")
@@ -875,12 +874,11 @@ ORDER BY event_type
 def stream_bitmap_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: (n_buckets, exact_users, stream_equals_batch,
     bitmap_count_ok)."""
-    import os
-
     from mapreduce_sm_spark.streaming.bitmap_stream import (
         bucket_and_pos,
         run_stream_bitmap,
     )
+    from mapreduce_sm_spark.streaming.runner import sink_name
 
     ev = table(spark, sf_dir, "events").select("event_type", "user_id")
     # floor-div bucketing (bucket_and_pos): consistent with pmod for
@@ -903,9 +901,7 @@ def stream_bitmap_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.bitmap_count(F.bitmap_construct_agg("pos")).alias("builtin_count"),
     )
 
-    qname = "stream_bitmap_" + os.path.basename(sf_dir.rstrip("/")).replace(
-        ".", "_"
-    )
+    qname = sink_name("stream_bitmap_", sf_dir)
     streamed = run_stream_bitmap(spark, sf_dir, query_name=qname)
 
     cmp = batch.alias("ba").join(
@@ -1444,9 +1440,8 @@ FROM sk
 )
 def stream_quantile_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: (n_kept, tau_h, sum_cents, stream_equals_batch)."""
-    import os
-
     from mapreduce_sm_spark.streaming.bottomk_stream import run_stream_bottomk
+    from mapreduce_sm_spark.streaming.runner import sink_name
 
     vals = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("key"),
@@ -1456,9 +1451,7 @@ def stream_quantile_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "h", "key", "cents", F.lit(1).alias("in_ba")
     )
 
-    qname = "stream_qsk_" + os.path.basename(sf_dir.rstrip("/")).replace(
-        ".", "_"
-    )
+    qname = sink_name("stream_qsk_", sf_dir)
     streamed = run_stream_bottomk(
         spark, sf_dir, _QSK_K, _QSK_SALT, query_name=qname
     ).withColumn("in_st", F.lit(1))

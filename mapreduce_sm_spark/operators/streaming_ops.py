@@ -1,7 +1,7 @@
 """Registry entries that drive the REAL Structured Streaming engine
-(readStream -> stateful op -> availableNow -> memory sink) and surface the
-final answer as a DataFrame, so the driver's oracle gate covers the
-streaming path end-to-end — not just a batch twin of its logic.
+(readStream -> stateful op -> availableNow -> sink, streaming/runner.py)
+and surface the final answer as a DataFrame, so the DuckDB oracle gate
+covers the streaming path end-to-end — not just a batch twin of its logic.
 """
 
 from __future__ import annotations
@@ -12,12 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_sm_spark.registry import REGISTRY
-
-
-def _sink_name(prefix: str, sf_dir: str) -> str:
-    """Unique memory-sink table name per (query, sf_dir): repeated runs
-    against different scale dirs must not collide on one sink."""
-    return prefix + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+from mapreduce_sm_spark.streaming.runner import sink_name
 
 _STATEFUL_ORACLE = """
 SELECT user_id,
@@ -39,7 +34,7 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_sm_spark.streaming.stateful import run_stateful_user_totals
 
     # unique sink name per sf_dir: repeated runs must not collide
-    qname = _sink_name("stateful_totals_", sf_dir)
+    qname = sink_name("stateful_totals_", sf_dir)
     return run_stateful_user_totals(
         spark, os.path.join(sf_dir, "events.parquet"), query_name=qname
     ).orderBy("user_id")
@@ -71,7 +66,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_streaming_click_purchase_join,
     )
 
-    qname = _sink_name("ss_join_", sf_dir)
+    qname = sink_name("ss_join_", sf_dir)
     return run_streaming_click_purchase_join(
         spark, sf_dir, qname, glob="events.parquet"
     ).orderBy("click_id", "purchase_id")
@@ -127,7 +122,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_session_micros,
     )
 
-    qname = _sink_name("ss_session_", sf_dir)
+    qname = sink_name("ss_session_", sf_dir)
     return run_streaming_query(
         spark,
         sf_dir,
@@ -164,7 +159,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreduce_sm_spark.streaming.windows import run_streaming_dedup_counts
 
-    qname = _sink_name("stream_dedup_", sf_dir)
+    qname = sink_name("stream_dedup_", sf_dir)
     deduped = run_streaming_dedup_counts(
         spark, sf_dir, qname, glob="events.parquet"
     )
@@ -235,7 +230,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    qname = _sink_name("stream_static_", sf_dir)
+    qname = sink_name("stream_static_", sf_dir)
     return run_streaming_query(
         spark, sf_dir, plan, qname, glob="events.parquet"
     ).orderBy("c_mktsegment")
@@ -266,47 +261,32 @@ def stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the MARKER-GATED read-back — so a lost batch, an uncommitted
     temp leaking into the read side, or a double-published replay all
     change the counts and fail the exact hash."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
+    from mapreduce_sm_spark.session import register_data_source, session_tmpdir
     from mapreduce_sm_spark.sources.jsonlog_sink import (
         JsonLogDataSource,
         committed_files,
     )
+    from mapreduce_sm_spark.streaming.runner import run_closed
     from mapreduce_sm_spark.streaming.windows import events_stream
 
-    from mapreduce_sm_spark.session import register_data_source
-
     register_data_source(spark, JsonLogDataSource)
-    # mkdtemp: collision-free under concurrent runs (a fixed per-sf_dir
-    # path + rmtree-on-entry would let one run destroy another's
-    # in-flight sink/checkpoint); atexit reclaims the corpus-sized JSON
-    # copy at process exit instead of leaking one per invocation
-    base = tempfile.mkdtemp(prefix="jsonlog_" + _sink_name("rt_", sf_dir))
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    # a fresh dir per run: collision-free under concurrent runs (a fixed
+    # per-sf_dir path + rmtree-on-entry would let one run destroy
+    # another's in-flight sink/checkpoint), reclaimed at process exit
+    base = session_tmpdir("jsonlog_" + sink_name("rt_", sf_dir))
     out_dir, ckpt = os.path.join(base, "log"), os.path.join(base, "ckpt")
     stream = events_stream(
         spark, sf_dir, glob="events.parquet", max_files_per_trigger=1
     ).select("event_id", "event_type", "value")
-    q = (
+    run_closed(
         stream.writeStream.format("jsonlog")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "stream_sink_roundtrip",
     )
-    # bounded like run_streaming_query — but a timeout must be LOUD: a
-    # False return means the log holds only a prefix of the batches, and
-    # reading it would surface as a confusing hash mismatch downstream
-    if not q.awaitTermination(120):
-        q.stop()
-        raise RuntimeError(
-            "stream_sink_roundtrip: streaming write did not finish in 120s"
-        )
     schema = "event_id long, event_type string, value double"
     files = committed_files(out_dir)
     # an empty source commits no batch: read an empty frame of the same
@@ -404,7 +384,7 @@ def stream_bloom_scrub_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    qname = _sink_name("bloom_scrub_", sf_dir)
+    qname = sink_name("bloom_scrub_", sf_dir)
     return run_streaming_query(
         spark, sf_dir, plan, qname, glob="events.parquet"
     ).orderBy("event_type")

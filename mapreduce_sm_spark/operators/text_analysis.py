@@ -1391,58 +1391,18 @@ def _gq_partial_counts_arrow(batches):
     tags=("streaming", "text", "quality", "incremental"),
 )
 def stream_gopher_gate_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import os as _os
-    import shutil
-    import tempfile
-
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from mapreduce_sm_spark.streaming.sketch_stream import (
-        documents_text_stream,
-    )
+    from mapreduce_sm_spark.streaming.runner import replay_stream, run_file_sink
 
     docs = table(spark, sf_dir, "documents").select("source", "text")
-    base = tempfile.mkdtemp(prefix="gopher_gate_stream_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    feed_dir, sink, ckpt = (
-        _os.path.join(base, "documents.parquet"),
-        _os.path.join(base, "gate"),
-        _os.path.join(base, "ckpt"),
-    )
     # 8 part files consumed 2 per trigger => 4 separate sink commits
-    docs.repartition(8).write.mode("overwrite").parquet(feed_dir)
-    stream = documents_text_stream(
-        spark,
+    stream, base = replay_stream(docs, "gopher_gate_stream_", 8, 2)
+    partials = run_file_sink(
+        _gq_flags(stream).mapInPandas(
+            _gq_partial_counts_arrow, _GQ_PARTIAL_SCHEMA
+        ),
         base,
-        glob="documents.parquet",
-        max_files_per_trigger=2,
-        columns=("source", "text"),
+        "stream_gopher_gate_equality",
     )
-    q = (
-        _gq_flags(stream)
-        .mapInPandas(_gq_partial_counts_arrow, _GQ_PARTIAL_SCHEMA)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):  # loud, never a silent prefix
-        q.stop()
-        raise RuntimeError(
-            "stream_gopher_gate_equality: stream did not finish in 120s"
-        )
-    try:
-        partials = spark.read.parquet(sink)
-    except AnalysisException as e:
-        if (e.getCondition() or "") not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        partials = spark.createDataFrame([], _GQ_PARTIAL_SCHEMA)
     counters = (
         "n_docs",
         "n_fail_top2",
@@ -2119,58 +2079,18 @@ def _qcg_partial_counts_arrow(batches):
 def stream_quality_classifier_equality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import atexit
-    import os as _os
-    import shutil
-    import tempfile
-
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from mapreduce_sm_spark.streaming.sketch_stream import (
-        documents_text_stream,
-    )
+    from mapreduce_sm_spark.streaming.runner import replay_stream, run_file_sink
 
     docs = table(spark, sf_dir, "documents").select("source", "text")
-    base = tempfile.mkdtemp(prefix="qcg_stream_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    feed_dir, sink, ckpt = (
-        _os.path.join(base, "documents.parquet"),
-        _os.path.join(base, "gate"),
-        _os.path.join(base, "ckpt"),
-    )
     # 8 part files consumed 2 per trigger => 4 separate sink commits
-    docs.repartition(8).write.mode("overwrite").parquet(feed_dir)
-    stream = documents_text_stream(
-        spark,
+    stream, base = replay_stream(docs, "qcg_stream_", 8, 2)
+    partials = run_file_sink(
+        _qcg_scored(stream).mapInPandas(
+            _qcg_partial_counts_arrow, _QCG_PARTIAL_SCHEMA
+        ),
         base,
-        glob="documents.parquet",
-        max_files_per_trigger=2,
-        columns=("source", "text"),
+        "stream_quality_classifier_equality",
     )
-    q = (
-        _qcg_scored(stream)
-        .mapInPandas(_qcg_partial_counts_arrow, _QCG_PARTIAL_SCHEMA)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):  # loud, never a silent prefix
-        q.stop()
-        raise RuntimeError(
-            "stream_quality_classifier_equality: stream did not finish in 120s"
-        )
-    try:
-        partials = spark.read.parquet(sink)
-    except AnalysisException as e:
-        if (e.getCondition() or "") not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        partials = spark.createDataFrame([], _QCG_PARTIAL_SCHEMA)
     counters = ("n_docs", "n_kept", "sum_score")
     compacted = partials.groupBy("source").agg(
         *[F.sum(c).cast("long").alias(c) for c in counters]

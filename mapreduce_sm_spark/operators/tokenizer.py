@@ -570,53 +570,16 @@ def _count_words_arrow(batches):
     tags=("streaming", "text", "tokenizer", "incremental", "persist"),
 )
 def stream_bpe_dict_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import os as _os
-    import shutil
-    import tempfile
-
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from mapreduce_sm_spark.streaming.sketch_stream import (
-        documents_text_stream,
-    )
+    from mapreduce_sm_spark.streaming.runner import replay_stream, run_file_sink
 
     docs = table(spark, sf_dir, "documents").select("text")
-    base = tempfile.mkdtemp(prefix="bpe_dict_stream_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    feed_dir, sink, ckpt = (
-        _os.path.join(base, "documents.parquet"),
-        _os.path.join(base, "dict"),
-        _os.path.join(base, "ckpt"),
-    )
     # 8 part files consumed 2 per trigger => 4 separate sink commits
-    docs.repartition(8).write.mode("overwrite").parquet(feed_dir)
-    stream = documents_text_stream(
-        spark, base, glob="documents.parquet", max_files_per_trigger=2
+    stream, base = replay_stream(docs, "bpe_dict_stream_", 8, 2)
+    partials = run_file_sink(
+        stream.mapInPandas(_count_words_arrow, "w string, freq long"),
+        base,
+        "stream_bpe_dict_equality",
     )
-    q = (
-        stream.mapInPandas(_count_words_arrow, "w string, freq long")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):  # loud, never a silent prefix
-        q.stop()
-        raise RuntimeError(
-            "stream_bpe_dict_equality: stream did not finish in 120s"
-        )
-    try:
-        partials = spark.read.parquet(sink)
-    except AnalysisException as e:
-        if (e.getCondition() or "") not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        partials = spark.createDataFrame([], "w string, freq long")
     compacted = partials.groupBy("w").agg(F.sum("freq").alias("freq"))
     rebuild = _word_dict(table(spark, sf_dir, "documents").select("text"))
     zero = F.lit(0).cast("long")

@@ -50,6 +50,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mapreduce_sm_spark.streaming.runner import fixture_stream, run_stateful_sink
+
 BITMAP_BYTES = 4096
 BITMAP_BITS = BITMAP_BYTES * 8  # 32768 positions per bucket
 
@@ -121,39 +123,6 @@ def _fold_bucket_bitmap(
     )
 
 
-def events_user_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming source over the events fixture (event_type, user_id only
-    — no timestamp handling needed, so the ts-dtype guard in
-    windows.events_stream does not apply). Schema from a one-off batch
-    footer read (no frozen schema, the r03 rule)."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from mapreduce_sm_spark.streaming._source import resolve_stream_path
-
-    path, g = resolve_stream_path(sf_dir, glob)
-    try:
-        rd = spark.read
-        if g is not None:
-            rd = rd.option("pathGlobFilter", g)
-        schema = rd.parquet(path).select("event_type", "user_id").schema
-    except AnalysisException as e:
-        cond = e.getCondition() or ""
-        if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        schema = "event_type string, user_id long"
-    reader = spark.readStream.schema(schema)
-    if g is not None:
-        reader = reader.option("pathGlobFilter", g)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
 def run_stream_bitmap(
     spark: SparkSession,
     sf_dir: str,
@@ -175,7 +144,13 @@ def run_stream_bitmap(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    stream = events_user_stream(spark, sf_dir, glob, max_files_per_trigger)
+    stream = fixture_stream(
+        spark,
+        sf_dir,
+        glob,
+        "event_type string, user_id long",
+        max_files_per_trigger,
+    )
     cells = stream.select("event_type", *bucket_and_pos("user_id"))
     out = cells.groupBy("event_type", "bucket").applyInPandasWithState(
         _fold_bucket_bitmap,
@@ -184,37 +159,7 @@ def run_stream_bitmap(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    from mapreduce_sm_spark.streaming.windows import _await_or_raise
-
-    if checkpoint_location is None:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, query_name, 180)
-        sink = spark.table(query_name)
-    else:
-        # restartable path — see bottomk_stream.py for why foreachBatch
-        # replaces the memory sink here (no checkpoint recovery there)
-        import os as _os
-
-        sink_dir = _os.path.join(checkpoint_location, "sink")
-
-        def _write_batch(df: DataFrame, _epoch: int) -> None:
-            df.write.mode("append").parquet(sink_dir)
-
-        q = (
-            out.writeStream.foreachBatch(_write_batch)
-            .option("checkpointLocation", checkpoint_location)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, query_name, 180)
-        sink = spark.read.parquet(sink_dir)
+    sink = run_stateful_sink(out, query_name, checkpoint_location)
     # update mode: one row per cell per touching batch. A bitmap only
     # gains bits, so the final state is the row with max n_bits — and on
     # an n_bits tie the SETS are equal (monotone growth: superset with
@@ -231,7 +176,6 @@ __all__ = [
     "BITMAP_OUTPUT_SCHEMA",
     "BITMAP_STATE_SCHEMA",
     "bits_md5_py",
-    "events_user_stream",
     "run_stream_bitmap",
     "bucket_and_pos",
 ]

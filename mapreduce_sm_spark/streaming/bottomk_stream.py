@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mapreduce_sm_spark.streaming.runner import fixture_stream, run_stateful_sink
+
 BOTTOMK_SHARDS = 32
 
 BOTTOMK_STATE_SCHEMA = StructType(
@@ -129,39 +131,6 @@ def make_bottomk_fold(k: int):
     return _fold
 
 
-def orders_price_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "orders.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming source over the orders fixture (key + price only);
-    schema from a one-off batch footer read (no frozen schema). Path
-    resolution handles both the single-file fixture layout and a
-    directory-valued orders.parquet (see streaming/_source.py)."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from mapreduce_sm_spark.streaming._source import resolve_stream_path
-
-    path, g = resolve_stream_path(sf_dir, glob)
-    try:
-        rd = spark.read
-        if g is not None:
-            rd = rd.option("pathGlobFilter", g)
-        schema = rd.parquet(path).select("o_orderkey", "o_totalprice").schema
-    except AnalysisException as e:
-        cond = e.getCondition() or ""
-        if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        schema = "o_orderkey long, o_totalprice double"
-    reader = spark.readStream.schema(schema)
-    if g is not None:
-        reader = reader.option("pathGlobFilter", g)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
 def run_stream_bottomk(
     spark: SparkSession,
     sf_dir: str,
@@ -182,7 +151,13 @@ def run_stream_bottomk(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    stream = orders_price_stream(spark, sf_dir, glob, max_files_per_trigger)
+    stream = fixture_stream(
+        spark,
+        sf_dir,
+        glob,
+        "o_orderkey long, o_totalprice double",
+        max_files_per_trigger,
+    )
     hkey = F.concat(F.lit(salt + "|"), F.col("o_orderkey").cast("string"))
     rows = stream.select(
         hash60(hkey).alias("h"),
@@ -201,43 +176,7 @@ def run_stream_bottomk(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    from mapreduce_sm_spark.streaming.windows import _await_or_raise
-
-    if checkpoint_location is None:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, query_name, 180)
-        sink = spark.table(query_name)
-    else:
-        # restartable path: the memory sink does NOT support checkpoint
-        # recovery ("This query does not support recovering from
-        # checkpoint location"), so persist each micro-batch's emissions
-        # via foreachBatch instead — RocksDB state + source offsets
-        # resume from checkpoint_location, and because the parquet sink
-        # ACCUMULATES across runs, the per-shard max-seq row is the
-        # final state even for shards a later run never touches.
-        # tests/test_streaming.py proves the fold survives stop/resume.
-        import os as _os
-
-        sink_dir = _os.path.join(checkpoint_location, "sink")
-
-        def _write_batch(df: DataFrame, _epoch: int) -> None:
-            df.write.mode("append").parquet(sink_dir)
-
-        q = (
-            out.writeStream.foreachBatch(_write_batch)
-            .option("checkpointLocation", checkpoint_location)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, query_name, 180)
-        sink = spark.read.parquet(sink_dir)
+    sink = run_stateful_sink(out, query_name, checkpoint_location)
     # update mode: one synopsis row per (shard, touching batch); per
     # shard the final state is unambiguously the max-seq row. Selected
     # with a window rather than a sink-vs-aggregate self-join: joining a
@@ -269,7 +208,6 @@ __all__ = [
     "BOTTOMK_SHARDS",
     "BOTTOMK_STATE_SCHEMA",
     "make_bottomk_fold",
-    "orders_price_stream",
     "run_stream_bottomk",
     "sketch_md5_py",
 ]

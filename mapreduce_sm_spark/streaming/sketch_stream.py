@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from mapreduce_sm_spark.streaming.runner import fixture_stream, run_memory
+
 CELL_STATE_SCHEMA = StructType([StructField("cnt", LongType())])
 
 CELL_OUTPUT_SCHEMA = StructType(
@@ -64,48 +66,6 @@ def _fold_cell_count(
     )
 
 
-def documents_text_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "documents.parquet",
-    max_files_per_trigger: int | None = None,
-    columns: tuple[str, ...] = ("text",),
-) -> DataFrame:
-    """Streaming source over the documents fixture (`columns` only;
-    default text — the band-index maintenance stream adds doc_id).
-
-    Schema comes from a one-off batch footer read of the same files — the
-    same no-frozen-schema rule events_stream follows (a hard-coded schema
-    is how r03 silently broke on a fixture dtype change).
-    max_files_per_trigger: availableNow honors it, so tests can FORCE a
-    multi-batch split and exercise the cross-batch state fold."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from mapreduce_sm_spark.streaming._source import resolve_stream_path
-
-    path, g = resolve_stream_path(sf_dir, glob)
-    try:
-        rd = spark.read
-        if g is not None:
-            rd = rd.option("pathGlobFilter", g)
-        schema = rd.parquet(path).select(*columns).schema
-    except AnalysisException as e:
-        # Only a genuinely empty source may fall back (events_stream's
-        # ADVICE r04 rule): the stream starts empty on the canonical
-        # column instead of failing inference; real errors must surface.
-        cond = e.getCondition() or ""
-        if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        fallback = {"text": "string", "doc_id": "bigint"}
-        schema = ", ".join(f"{c} {fallback.get(c, 'string')}" for c in columns)
-    reader = spark.readStream.schema(schema)
-    if g is not None:
-        reader = reader.option("pathGlobFilter", g)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
 def run_stream_countmin(
     spark: SparkSession,
     sf_dir: str,
@@ -128,7 +88,9 @@ def run_stream_countmin(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    stream = documents_text_stream(spark, sf_dir, glob, max_files_per_trigger)
+    stream = fixture_stream(
+        spark, sf_dir, glob, "text string", max_files_per_trigger
+    )
     toks = stream.select(F.explode(tokenize_words("text")).alias("token"))
     j = F.explode(F.array(*[F.lit(i) for i in range(d)])).alias("j")
     cells = toks.select("token", j).select(
@@ -142,17 +104,7 @@ def run_stream_countmin(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    from mapreduce_sm_spark.streaming.windows import _await_or_raise
-
-    _await_or_raise(q, query_name, 180)
-    sink = spark.table(query_name)
+    sink = run_memory(out, query_name, "update")[0]
     # update mode: one row per cell per touching batch; the fold is
     # monotone non-decreasing, so the final state is the max per cell.
     return sink.groupBy("j", "b").agg(F.max("cnt").alias("cnt"))
@@ -161,6 +113,5 @@ def run_stream_countmin(
 __all__ = [
     "CELL_OUTPUT_SCHEMA",
     "CELL_STATE_SCHEMA",
-    "documents_text_stream",
     "run_stream_countmin",
 ]

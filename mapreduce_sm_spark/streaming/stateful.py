@@ -36,6 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mapreduce_sm_spark.streaming.runner import run_memory
 from mapreduce_sm_spark.streaming.windows import events_stream
 
 STATE_SCHEMA = StructType(
@@ -100,19 +101,9 @@ def run_stateful_user_totals(
     leaf = os.path.basename(events_parquet_path.rstrip("/"))
     stream = events_stream(spark, base, glob=leaf)
     out = stateful_user_totals(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    from mapreduce_sm_spark.streaming.windows import _await_or_raise
-
-    _await_or_raise(q, query_name, 180)
+    sink = run_memory(out, query_name, "update")[0]
     # update mode emits one row per key per batch that touched it; the final
     # state per user is the row with the highest n_events (monotone fold).
-    sink = spark.table(query_name)
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from mapreduce_sm_spark.streaming.runner import run_memory
 from mapreduce_sm_spark.streaming.windows import events_stream
 
 PROFILE_OUTPUT_SCHEMA = StructType(
@@ -107,17 +108,7 @@ def run_user_profile(
         outputMode="Update",
         timeMode="None",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    from mapreduce_sm_spark.streaming.windows import _await_or_raise
-
-    _await_or_raise(q, query_name, 180)
-    sink = spark.table(query_name)
+    sink = run_memory(out, query_name, "update")[0]
     # update mode: one row per key per touching batch; the final state has
     # the maximal n_events (monotone fold)
     from pyspark.sql import Window

@@ -15,22 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
-
-def _await_or_raise(q, query_name: str, timeout_s: int) -> None:
-    """awaitTermination(timeout) returns False on timeout WITHOUT raising,
-    so a hung availableNow query would silently hand back a partial memory
-    table. Fail loud instead, surfacing the query's own exception when one
-    exists (which a bare .stop() would swallow)."""
-    if q.awaitTermination(timeout_s):
-        return
-    exc = q.exception()
-    q.stop()
-    raise TimeoutError(
-        f"streaming query {query_name!r} did not finish in {timeout_s}s"
-        + (f": {exc}" if exc else "")
-    )
+from mapreduce_sm_spark.streaming.runner import (
+    fixture_stream,
+    run_closed,
+    run_memory,
+)
 
 
 def events_stream(
@@ -46,44 +36,20 @@ def events_stream(
     silently broke: the fixture moved from TIMESTAMP(NANOS) to
     timestamp[us], and a frozen LongType-ts schema plus a `ts DIV 1000`
     conversion collapsed every streamed timestamp to January 1970
-    (VERDICT r3 item 4). Instead, take the schema from a one-off batch
-    scan of the same files (driver-side footer read, no data scan) and
-    apply the nanos->micros conversion only when the scanned dtype really
-    is nanos-as-long — the exact guard the batch path uses."""
-    from mapreduce_sm_spark.streaming._source import resolve_stream_path
-
+    (VERDICT r3 item 4). Instead, take the schema from the footers
+    (runner.fixture_stream) and apply the nanos->micros conversion only
+    when the scanned dtype really is nanos-as-long — the exact guard the
+    batch path uses."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path, g = resolve_stream_path(events_parquet_dir, glob)
-    try:
-        rd = spark.read
-        if g is not None:
-            rd = rd.option("pathGlobFilter", g)
-        batch = rd.parquet(path)
-        schema, ts_dtype = batch.schema, dict(batch.dtypes).get("ts")
-    except AnalysisException as e:
-        # Only an empty source is a legitimate "no files yet" state (an
-        # existing directory that will be fed later — readStream itself
-        # requires the path to exist): fall back to the canonical events
-        # schema so the stream starts empty instead of failing inference.
-        # Anything else — corrupt footers, permission errors — must
-        # surface, not masquerade as a zero-row stream (ADVICE r04).
-        cond = e.getCondition() or ""
-        if cond not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        schema = (
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double, props string"
-        )
-        ts_dtype = "timestamp"
-    reader = spark.readStream.schema(schema)
-    if g is not None:
-        reader = reader.option("pathGlobFilter", g)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
+    stream = fixture_stream(
+        spark,
+        events_parquet_dir,
+        glob,
+        "event_id long, ts timestamp, user_id long, "
+        "event_type string, value double, props string",
+        max_files_per_trigger,
+    )
+    ts_dtype = dict(stream.dtypes)["ts"]
     if ts_dtype == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     elif ts_dtype == "timestamp_ntz":
@@ -108,26 +74,6 @@ def streaming_tumbling_counts(stream: DataFrame) -> DataFrame:
             "n",
         )
     )
-
-
-def run_streaming_tumbling_counts(
-    spark: SparkSession, events_parquet_dir: str, query_name: str = "tumbling_counts"
-) -> DataFrame:
-    """Run the streaming plan over a (closed) parquet directory with the
-    availableNow trigger and return the complete result from the memory
-    sink. Exercises the real streaming engine: source -> watermark ->
-    stateful agg -> sink."""
-    stream = events_stream(spark, events_parquet_dir, max_files_per_trigger=1)
-    out = streaming_tumbling_counts(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_raise(q, query_name, 120)
-    return spark.table(query_name)
 
 
 def streaming_sliding_counts(stream: DataFrame) -> DataFrame:
@@ -204,16 +150,7 @@ def run_streaming_query(
     stream = events_stream(
         spark, events_parquet_dir, glob=glob, max_files_per_trigger=1
     )
-    q = (
-        plan_fn(stream)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_raise(q, query_name, 120)
-    return spark.table(query_name)
+    return run_memory(plan_fn(stream), query_name, "complete")[0]
 
 
 def streaming_click_purchase_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
@@ -265,16 +202,9 @@ def run_streaming_click_purchase_join(
     purchases = events_stream(spark, events_parquet_dir, glob=glob).filter(
         F.col("event_type") == "purchase"
     )
-    q = (
-        streaming_click_purchase_join(clicks, purchases)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_raise(q, query_name, 180)
-    return spark.table(query_name)
+    return run_memory(
+        streaming_click_purchase_join(clicks, purchases), query_name, "append"
+    )[0]
 
 
 def run_foreach_batch_parquet(
@@ -298,14 +228,12 @@ def run_foreach_batch_parquet(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    q = (
+    run_closed(
         agg.writeStream.foreachBatch(_write)
         .outputMode("complete")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+        .queryName(query_name),
+        query_name,
     )
-    _await_or_raise(q, query_name, 120)
 
 
 def run_streaming_dedup_counts(
@@ -335,15 +263,11 @@ def run_streaming_dedup_counts(
     deduped = doubled.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    q = (
-        deduped.select("event_id", "user_id", "event_type", "value")
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    sink, q = run_memory(
+        deduped.select("event_id", "user_id", "event_type", "value"),
+        query_name,
+        "append",
     )
-    _await_or_raise(q, query_name, 120)
     data_batches = [
         p for p in q.recentProgress if p.get("numInputRows", 0) > 0
     ]
@@ -354,4 +278,4 @@ def run_streaming_dedup_counts(
             "evicted before their duplicate arrived (widen the watermark "
             "past the event-time span or feed a single batch)"
         )
-    return spark.table(query_name)
+    return sink

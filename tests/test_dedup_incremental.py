@@ -276,7 +276,7 @@ def test_stream_decontamination_equality_law(spark, monkeypatch):
     (base,) = made
     commits = [
         f
-        for f in os.listdir(os.path.join(base, "decon", "_spark_metadata"))
+        for f in os.listdir(os.path.join(base, "sink", "_spark_metadata"))
         if f.isdigit() or f.split(".")[0].isdigit()
     ]
     assert len(commits) >= 2, commits

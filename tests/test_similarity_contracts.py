@@ -291,7 +291,7 @@ def test_stream_semantic_index_commits_multiple_appends(spark):
     )
     commits = [
         f
-        for f in os.listdir(os.path.join(base, "index", "_spark_metadata"))
+        for f in os.listdir(os.path.join(base, "sink", "_spark_metadata"))
         if f.isdigit() or f.split(".")[0].isdigit()
     ]
     assert len(commits) >= 2, commits

@@ -12,7 +12,10 @@ def test_streaming_tumbling_equals_batch(spark, tmp_path):
     import shutil
 
     from mapreduce_sm_spark.operators.events import tumbling_window
-    from mapreduce_sm_spark.streaming.windows import run_streaming_tumbling_counts
+    from mapreduce_sm_spark.streaming.windows import (
+        run_streaming_query,
+        streaming_tumbling_counts,
+    )
 
     batch = {
         (r.win_start, r.event_type): r.n
@@ -26,8 +29,8 @@ def test_streaming_tumbling_equals_batch(spark, tmp_path):
         os.path.join(SF_DIR, "events.parquet"),
         os.path.join(events_dir, "part-0.parquet"),
     )
-    streamed_df = run_streaming_tumbling_counts(
-        spark, events_dir, query_name="t_stream_test"
+    streamed_df = run_streaming_query(
+        spark, events_dir, streaming_tumbling_counts, "t_stream_test"
     )
     streamed = {
         (r.win_start, r.event_type): r.n for r in streamed_df.collect()
@@ -459,7 +462,8 @@ def test_stateful_streaming_on_rocksdb_state_store(spark, tmp_path):
     from mapreduce_sm_spark.session import table
     from mapreduce_sm_spark.streaming.stateful import run_stateful_user_totals
     from mapreduce_sm_spark.streaming.windows import (
-        run_streaming_tumbling_counts,
+        run_streaming_query,
+        streaming_tumbling_counts,
     )
 
     events_dir = _stream_events_dir(tmp_path)
@@ -478,8 +482,8 @@ def test_stateful_streaming_on_rocksdb_state_store(spark, tmp_path):
             (r.win_start, r.event_type): r.n
             for r in tumbling_window(spark, SF_DIR).collect()
         }
-        streamed_df = run_streaming_tumbling_counts(
-            spark, events_dir, query_name="t_rocks_test"
+        streamed_df = run_streaming_query(
+            spark, events_dir, streaming_tumbling_counts, "t_rocks_test"
         )
         streamed = {
             (r.win_start, r.event_type): r.n for r in streamed_df.collect()
@@ -936,7 +940,7 @@ def test_stream_index_maintenance_commits_multiple_appends(spark):
     maintained, base = _stream_maintained_index(spark, SF_DIR)
     commits = [
         f
-        for f in os.listdir(os.path.join(base, "index", "_spark_metadata"))
+        for f in os.listdir(os.path.join(base, "sink", "_spark_metadata"))
         if f.isdigit() or f.split(".")[0].isdigit()
     ]
     assert len(commits) >= 2, commits
@@ -945,3 +949,67 @@ def test_stream_index_maintenance_commits_multiple_appends(spark):
     ).collect()[0]
     assert row["n_mismatch"] == 0 and row["stream_equals_batch"]
     assert row["n_index_rows"] > 0
+
+
+def test_timed_out_stream_is_stopped_and_raises():
+    """awaitTermination returns False on timeout without raising; the
+    runner must stop the query and raise TimeoutError naming it, never
+    hand back the prefix of batches the sink holds so far."""
+    import pytest
+
+    from mapreduce_sm_spark.streaming.runner import STREAM_TIMEOUT_S, run_closed
+
+    class HungQuery:
+        stopped = False
+        waited = None
+
+        def awaitTermination(self, timeout):
+            self.waited = timeout
+            return False
+
+        def exception(self):
+            return None
+
+        def stop(self):
+            self.stopped = True
+
+    q = HungQuery()
+
+    class Writer:
+        def trigger(self, availableNow):
+            assert availableNow is True
+            return self
+
+        def start(self):
+            return q
+
+    with pytest.raises(TimeoutError, match="'hung_sink_test'"):
+        run_closed(Writer(), "hung_sink_test")
+    assert q.stopped and q.waited == STREAM_TIMEOUT_S
+
+
+def test_corrupt_committed_sink_file_raises(spark):
+    """Only PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA may read back as an
+    empty frame. A sink whose one committed file is corrupt must raise,
+    not pass for an empty stream (whose audit would then read clean)."""
+    import glob
+
+    import pytest
+
+    from mapreduce_sm_spark.streaming.runner import (
+        SINK,
+        read_committed,
+        replay_stream,
+        run_file_sink,
+    )
+
+    stream, base = replay_stream(spark.range(10), "corrupt_sink_test_", 1, 1)
+    out = run_file_sink(stream, base, "corrupt_sink_test")
+    assert out.count() == 10
+    sink = os.path.join(base, SINK)
+    (part,) = glob.glob(os.path.join(sink, "*.parquet"))
+    with open(part, "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet") as err:
+        read_committed(spark, sink, out.schema)
+    assert "PATH_NOT_FOUND" not in str(err.value)

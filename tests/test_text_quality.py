@@ -214,7 +214,7 @@ def test_stream_gopher_gate_equality_law(spark, monkeypatch):
     (base,) = made
     commits = [
         f
-        for f in os.listdir(os.path.join(base, "gate", "_spark_metadata"))
+        for f in os.listdir(os.path.join(base, "sink", "_spark_metadata"))
         if f.isdigit() or f.split(".")[0].isdigit()
     ]
     assert len(commits) >= 2, commits
@@ -284,7 +284,7 @@ def test_stream_quality_classifier_equality_law(spark, monkeypatch):
     (base,) = made
     commits = [
         f
-        for f in os.listdir(os.path.join(base, "gate", "_spark_metadata"))
+        for f in os.listdir(os.path.join(base, "sink", "_spark_metadata"))
         if f.isdigit() or f.split(".")[0].isdigit()
     ]
     assert len(commits) >= 2, commits

@@ -280,7 +280,7 @@ def test_stream_bpe_dict_commits_multiple_appends(spark, tmp_path, monkeypatch):
     (base,) = made
     commits = [
         f
-        for f in os.listdir(os.path.join(base, "dict", "_spark_metadata"))
+        for f in os.listdir(os.path.join(base, "sink", "_spark_metadata"))
         if f.isdigit() or f.split(".")[0].isdigit()
     ]
     assert len(commits) >= 2, commits
