@@ -300,18 +300,6 @@ def _size_bytes(v: str) -> int:
 _FAN_OUT_WIDE: dict[tuple, bool] = {}
 
 
-def _parquet_row_groups(path: str) -> float:
-    """Row groups in a local parquet file's footer; inf for a file that is
-    not parquet (a text scan splits by bytes, so it caps nothing)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        return pq.ParquetFile(path).metadata.num_row_groups
-    except pa.ArrowInvalid:
-        return float("inf")
-
-
 def _scan_is_wide(df, n: int) -> bool:
     """Estimate whether df's file scan already splits to >= n partitions,
     WITHOUT converting to an RDD (df.rdd forces full physical planning plus
@@ -321,9 +309,6 @@ def _scan_is_wide(df, n: int) -> bool:
     Replays Spark's FilePartition arithmetic from the file sizes:
       maxSplitBytes = min(maxPartitionBytes, max(openCost, totalBytes/n))
       splits ~= totalBytes / maxSplitBytes
-    capped by the files' total parquet row-group count: Spark hands each
-    row group to the one split holding its midpoint, so a 7 MB file with
-    a single row group scans as 4 splits of which only 1 has rows.
     Files we cannot stat (non-local URIs) fall back to len(files) as a
     lower bound on split count — on a remote 100 TB layout there are far
     more files than cores, so the repartition is correctly skipped."""
@@ -340,7 +325,6 @@ def _scan_is_wide(df, n: int) -> bool:
     if wide is not None:
         return wide
     sizes = []
-    row_groups = 0
     statable = True
     for f in files:
         # file:///p and file:/p both leave a stat-able POSIX path after the
@@ -352,7 +336,6 @@ def _scan_is_wide(df, n: int) -> bool:
         except OSError:
             statable = False
             break
-        row_groups += _parquet_row_groups(path)
     if not statable:
         wide = len(files) >= n
     else:
@@ -365,7 +348,7 @@ def _scan_is_wide(df, n: int) -> bool:
         total = sum(sizes) + open_cost * len(sizes)
         max_split = min(max_part, max(open_cost, total // max(n, 1)))
         est_splits = -(-total // max(max_split, 1))  # ceil div
-        wide = min(est_splits, row_groups) >= n
+        wide = est_splits >= n
     _FAN_OUT_WIDE[key] = wide
     return wide
 

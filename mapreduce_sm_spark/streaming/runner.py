@@ -14,7 +14,8 @@ Streaming's incremental execution plus its exactly-once file sink
   under a process-lifetime tempdir and streams them back M per trigger
   under the frame's own schema — the arrival simulation of the
   maintenance laws;
-- sinks: `run_memory` (complete/update/append tables), `run_file_sink`
+- sinks: `run_memory` (complete/update/append tables, written by
+  `memory_writer`), `run_file_sink`
   (the exactly-once parquet sink plus its committed read-back) and
   `run_stateful_sink` (memory, or the restartable foreachBatch->parquet
   sink when the caller owns a checkpoint location);
@@ -157,18 +158,21 @@ def run_closed(writer: DataStreamWriter, query_name: str) -> StreamingQuery:
     return q
 
 
-def run_memory(
+def memory_writer(
     out: DataFrame, query_name: str, output_mode: str
-) -> tuple[DataFrame, StreamingQuery]:
-    """Run `out` into the memory table `query_name`; returns (the table,
-    the finished query, whose recentProgress describes the batches)."""
-    q = run_closed(
+) -> DataStreamWriter:
+    """`out` written to the memory table `query_name`."""
+    return (
         out.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode(output_mode),
-        query_name,
+        .outputMode(output_mode)
     )
-    return out.sparkSession.table(query_name), q
+
+
+def run_memory(out: DataFrame, query_name: str, output_mode: str) -> DataFrame:
+    """Run `out` into the memory table `query_name` and return the table."""
+    run_closed(memory_writer(out, query_name, output_mode), query_name)
+    return out.sparkSession.table(query_name)
 
 
 def read_committed(
@@ -214,7 +218,7 @@ def run_stateful_sink(
     and the parquet sink ACCUMULATES across runs, so the caller's
     final-state pick still sees shards a later run never touches."""
     if checkpoint_location is None:
-        return run_memory(out, query_name, "update")[0]
+        return run_memory(out, query_name, "update")
     sink = os.path.join(checkpoint_location, SINK)
 
     def _write_batch(df: DataFrame, _epoch: int) -> None:

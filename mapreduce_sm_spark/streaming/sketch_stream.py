@@ -104,7 +104,7 @@ def run_stream_countmin(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = run_memory(out, query_name, "update")[0]
+    sink = run_memory(out, query_name, "update")
     # update mode: one row per cell per touching batch; the fold is
     # monotone non-decreasing, so the final state is the max per cell.
     return sink.groupBy("j", "b").agg(F.max("cnt").alias("cnt"))

@@ -101,7 +101,7 @@ def run_stateful_user_totals(
     leaf = os.path.basename(events_parquet_path.rstrip("/"))
     stream = events_stream(spark, base, glob=leaf)
     out = stateful_user_totals(stream)
-    sink = run_memory(out, query_name, "update")[0]
+    sink = run_memory(out, query_name, "update")
     # update mode emits one row per key per batch that touched it; the final
     # state per user is the row with the highest n_events (monotone fold).
     from pyspark.sql import Window

@@ -108,7 +108,7 @@ def run_user_profile(
         outputMode="Update",
         timeMode="None",
     )
-    sink = run_memory(out, query_name, "update")[0]
+    sink = run_memory(out, query_name, "update")
     # update mode: one row per key per touching batch; the final state has
     # the maximal n_events (monotone fold)
     from pyspark.sql import Window

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_sm_spark.streaming.runner import (
     fixture_stream,
+    memory_writer,
     run_closed,
     run_memory,
 )
@@ -150,7 +151,7 @@ def run_streaming_query(
     stream = events_stream(
         spark, events_parquet_dir, glob=glob, max_files_per_trigger=1
     )
-    return run_memory(plan_fn(stream), query_name, "complete")[0]
+    return run_memory(plan_fn(stream), query_name, "complete")
 
 
 def streaming_click_purchase_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
@@ -204,7 +205,7 @@ def run_streaming_click_purchase_join(
     )
     return run_memory(
         streaming_click_purchase_join(clicks, purchases), query_name, "append"
-    )[0]
+    )
 
 
 def run_foreach_batch_parquet(
@@ -263,10 +264,13 @@ def run_streaming_dedup_counts(
     deduped = doubled.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    sink, q = run_memory(
-        deduped.select("event_id", "user_id", "event_type", "value"),
+    q = run_closed(
+        memory_writer(
+            deduped.select("event_id", "user_id", "event_type", "value"),
+            query_name,
+            "append",
+        ),
         query_name,
-        "append",
     )
     data_batches = [
         p for p in q.recentProgress if p.get("numInputRows", 0) > 0
@@ -278,4 +282,4 @@ def run_streaming_dedup_counts(
             "evicted before their duplicate arrived (widen the watermark "
             "past the event-time span or feed a single batch)"
         )
-    return sink
+    return spark.table(query_name)

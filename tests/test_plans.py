@@ -155,35 +155,6 @@ def test_fan_out_is_width_aware(spark):
     assert fan_out(narrow, "id").rdd.getNumPartitions() == n
 
 
-def test_fan_out_counts_row_groups_not_bytes(spark, tmp_path):
-    """A parquet file larger than n x openCostInBytes splits into n byte
-    ranges, but Spark hands its single row group to one split: the scan
-    has one non-empty partition, so fan_out must still repartition."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from mapreduce_sm_spark.session import _size_bytes, fan_out
-
-    n = spark.sparkContext.defaultParallelism
-    open_cost = _size_bytes(spark.conf.get("spark.sql.files.openCostInBytes"))
-    rows = 3 * n * open_cost // (2 * 4096)
-    path = str(tmp_path / "one_row_group.parquet")
-    pq.write_table(
-        pa.table({"blob": [os.urandom(4096) for _ in range(rows)]}),
-        path,
-        row_group_size=rows,
-        compression="none",
-    )
-    assert pq.ParquetFile(path).metadata.num_row_groups == 1
-    assert os.path.getsize(path) > n * open_cost
-    rows_per_partition = (
-        fan_out(spark.read.parquet(path)).rdd.glom().map(len).collect()
-    )
-    assert len(rows_per_partition) == n and all(rows_per_partition)
-
-
 def test_inverted_index_topk_and_broadcast_back(spark):
     """Top-token selection must plan as TakeOrderedAndProject (never a
     global window over the vocabulary) and the winner set must broadcast
